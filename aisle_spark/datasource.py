@@ -14,11 +14,12 @@ contract):
   to promise exact evaluation and correctness always rests on Catalyst's
   own residual filter.
 * ``partitions`` prunes at PLANNING time: the committed block files'
-  manifest columns are filtered with the DuckDB-dialect evidence
-  predicate (prune_sql.keep_sql — differentially tested against the
-  Catalyst form), producing one input partition per file that still has
-  surviving blocks, carrying the survivors' row numbers. Blocks that are
-  definitely-false never get a task scheduled.
+  manifest stat columns go through the numpy tri-state evaluator the
+  reader's chunk tier also uses (chunkstats.unit_tri — differentially
+  tested to select the Catalyst ``keep()`` block set), producing one
+  input partition per file that still has surviving blocks, carrying
+  the survivors' row numbers. Blocks that are definitely-false never get
+  a task scheduled.
 * ``read`` decodes surviving blocks through the very same plan the
   ``scan()`` path uses (``pipeline._decode_fn``: chunk-level skip +
   in-reader row mask + struct reassembly) and yields Arrow batches.
@@ -33,9 +34,10 @@ readers never observe files from failed or speculative attempts.
 Scale notes: planning reads ONLY manifest stat columns of the committed
 files (parquet projection pushdown; payload bytes untouched) — the same
 footer-sized I/O the reference's metadata load performs. At 10^5+ files
-the DuckDB scan is itself parallel and the per-file partition list stays
-O(files); small files (< 4 MB by their manifest ``__bytes``) bin-pack
-sequentially into combined ~32 MB partitions so a not-yet-OPTIMIZEd
+the stat fetches run on a bounded thread pool, evaluation is one
+vectorized pass over all surviving blocks, and the per-file partition
+list stays O(files); small files (< 4 MB by their manifest ``__bytes``)
+bin-pack sequentially into combined ~32 MB partitions so a not-yet-OPTIMIZEd
 streaming table never schedules 10^5 near-empty tasks. No driver-side
 collect touches payload data anywhere.
 """
@@ -48,6 +50,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 
 from pyspark.sql.datasource import (
@@ -258,6 +261,21 @@ def _parallel_fetch(fn, items: list):
         max_workers=min(_PLANNING_IO_THREADS, len(items))
     ) as ex:
         return list(ex.map(fn, items))
+
+
+def _load_stats(fs, path: str, wanted: list[str]) -> pa.Table:
+    """The ``wanted`` manifest columns one block file carries, mapped into
+    the evaluator's stat domains (the two writers store timestamps and
+    durations differently)."""
+    import pyarrow.parquet as pq
+
+    from aisle_spark.chunkstats import stat_domain
+
+    with open(path, "rb") if fs is None else fs.open_input_file(path) as src:
+        pf = pq.ParquetFile(src, coerce_int96_timestamp_unit="us")
+        have = set(pf.schema_arrow.names)
+        t = pf.read(columns=[c for c in wanted if c in have])
+    return pa.table({n: stat_domain(t.column(n)) for n in t.column_names})
 
 
 def _exists(fs, path: str) -> bool:
@@ -513,72 +531,37 @@ class AisleReader(DataSourceReader):
         files = [f for f in files if file_keep(fstats.get(f), prune, doms)]
         if not files:
             return []
-        import duckdb
+        # block tier: the shared numpy evaluator over the manifest stat
+        # columns of the surviving files, read through pyarrow (payload
+        # and chunk arrays never transfer). Fetches run under a bounded
+        # thread pool — serial footer round-trips at 10^5 files x ~50ms
+        # would mean hours of planning before a single task schedules
+        # (VERDICT r3 #2)
+        from aisle_spark.chunkstats import stat_columns, unit_tri
+        from aisle_spark.schema import specs_for_schema
 
-        from aisle_spark.prune_sql import keep_sql
-
-        con = duckdb.connect()
-        con.execute("SET TimeZone='UTC'")
-        sql = keep_sql(prune)
-        if self.fs is None:
-            listed = (
-                "[" + ", ".join("'" + f.replace("'", "''") + "'" for f in files) + "]"
-            )
-            survivors = con.execute(
-                f"SELECT filename, file_row_number FROM read_parquet({listed}, "
-                f"filename=true, file_row_number=true) WHERE {sql} "
-                f"ORDER BY filename, file_row_number"
-            ).fetchall()
-        else:
-            # object-store planning: pull ONLY the manifest stat columns
-            # through pyarrow (payload/chunk arrays never transfer), then
-            # run the same evidence SQL over the in-memory Arrow table.
-            # Fetches run under a bounded thread pool — serial footer
-            # round-trips at 10^5 files x ~50ms would mean hours of
-            # planning before a single task schedules (VERDICT r3 #2)
-            def _load_one(f: str) -> pa.Table:
-                import pyarrow.parquet as pq
-
-                with self.fs.open_input_file(f) as src:
-                    pf = pq.ParquetFile(src)
-                    stat_cols = [
-                        n
-                        for n in pf.schema_arrow.names
-                        if not n.endswith(
-                            ("__payload", "__chunk_min", "__chunk_max",
-                             "__chunk_nulls")
-                        )
-                    ]
-                    t = pf.read(columns=stat_cols)
-                t = t.append_column(
-                    "filename", pa.array([f] * t.num_rows, type=pa.string())
-                )
-                return t.append_column(
-                    "file_row_number",
-                    pa.array(range(t.num_rows), type=pa.int64()),
-                )
-
-            parts = _parallel_fetch(_load_one, files)
-            manifest_tbl = pa.concat_tables(parts)  # noqa: F841 (duckdb scan)
-            survivors = con.execute(
-                f"SELECT filename, file_row_number FROM manifest_tbl WHERE {sql} "
-                f"ORDER BY filename, file_row_number"
-            ).fetchall()
-        by_file: dict[str, list[int]] = {}
-        for fname, rowno in survivors:
-            by_file.setdefault(fname, []).append(int(rowno))
+        where = utc_normalize(prune)
+        wanted = ["n_rows", *stat_columns(where)]
+        files = sorted(files)  # name order, which _pack_partitions relies on
+        tables = _parallel_fetch(lambda f: _load_stats(self.fs, f, wanted), files)
+        tbl = pa.concat_tables(tables, promote_options="default")
+        stats = {n: tbl.column(n) for n in tbl.column_names}
+        kinds = {s.name: s for s in specs_for_schema(self.arrow_schema)}
+        keep = ~unit_tri(where, stats, kinds, stats["n_rows"].to_numpy())[1]
         # plan-size cap (VERDICT r3 wrong #3): a weakly-selective predicate
         # over a huge table would ship O(surviving blocks) row numbers
         # through the driver; above the cap the reader re-prunes instead
         # (decode_block_filtered skips doomed blocks and chunks) — same
         # result, constant plan size
-        return _pack_partitions(
-            [
-                (f, tuple(rows) if len(rows) <= _PARTITION_ROWS_CAP else None)
-                for f, rows in by_file.items()
-            ],
-            fstats,
-        )
+        entries = []
+        at = 0
+        for path, t in zip(files, tables):
+            rows = np.flatnonzero(keep[at : at + t.num_rows]).tolist()
+            at += t.num_rows
+            if rows:
+                capped = tuple(rows) if len(rows) <= _PARTITION_ROWS_CAP else None
+                entries.append((path, capped))
+        return _pack_partitions(entries, fstats)
 
     def read(self, partition: AislePartition) -> Iterator[pa.RecordBatch]:
         if partition is None:  # Spark schedules one task when partitions()==[]

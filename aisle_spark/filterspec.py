@@ -4,22 +4,25 @@ This is the engine's analog of aisle's pruning IR (`Expr`,
 /root/reference/src/expr.rs:94-165) and its row-group evaluators
 (/root/reference/src/prune/cmp.rs, in_list.rs, between.rs, is_null.rs,
 starts_with.rs, dictionary.rs). Every node evaluates against a block's
-stats columns to a Kleene tri-state, represented as a PAIR of null-free
-boolean Columns ``(definitely_true, definitely_false)``:
+stats columns to a Kleene tri-state (definitely true / definitely false /
+Unknown), lowered to two structural Columns: ``keep()`` = NOT definitely
+false and ``not_true()`` = NOT definitely true:
 
-    False  => prune the block
-    True/Unknown => keep          (never skip data that might match —
+    definitely false => prune the block
+    True/Unknown     => keep      (never skip data that might match —
                                    /root/reference/docs/architecture.md:8)
 
 Missing stats (all-null block, or a block written without stats) make the
-underlying comparisons NULL; every leaf wraps both sides in
-``coalesce(..., false)`` so NULL collapses to Unknown=keep, never to a
-wrong prune (the subtle Spark trap named in SURVEY.md §7.3: a bare NULL
-skip-condition inside ``filter`` would silently drop blocks).
+underlying comparisons NULL; every leaf ORs in ``stat IS NULL`` so NULL
+collapses to Unknown=keep, never to a wrong prune (the subtle Spark trap
+named in SURVEY.md §7.3: a bare NULL skip-condition inside ``filter``
+would silently drop blocks).
 
 Connectives are Kleene (/root/reference/src/expr.rs:15-37):
   and: t = all(t_i), f = any(f_i);  or: t = any(t_i), f = all(f_i)
   not: swap(t, f) — Unknown is a fixed point.
+The numpy form of the same algebra, over per-block or per-chunk stat
+arrays, is ``chunkstats.unit_tri``.
 
 The same AST lowers three ways:
   * ``keep_blocks()``   -> manifest filter Column (block pruning)
@@ -97,7 +100,7 @@ def truncate_stat_max(v, limit: int = STAT_TRUNC):
 
 
 # ---------------------------------------------------------------------------
-# tri-state algebra
+# evidence options
 # ---------------------------------------------------------------------------
 
 
@@ -114,34 +117,6 @@ class PruneOptions:
 
 
 DEFAULT_OPTIONS = PruneOptions()
-
-
-@dataclass(frozen=True)
-class Tri:
-    t: Column  # definitely true (null-free)
-    f: Column  # definitely false (null-free)
-
-
-def _c(x: Column) -> Column:
-    return F.coalesce(x, F.lit(False))
-
-
-def tri_and(parts: list[Tri]) -> Tri:
-    t = parts[0].t
-    f = parts[0].f
-    for p in parts[1:]:
-        t = t & p.t
-        f = f | p.f
-    return Tri(t, f)
-
-
-def tri_or(parts: list[Tri]) -> Tri:
-    t = parts[0].t
-    f = parts[0].f
-    for p in parts[1:]:
-        t = t | p.t
-        f = f & p.f
-    return Tri(t, f)
 
 
 # ---------------------------------------------------------------------------
@@ -190,9 +165,6 @@ class Spec:
         return Not(self)
 
     # -- interface --
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:  # block-level tri-state
-        raise NotImplementedError
-
     def residual(self) -> Column:  # exact row-level Column
         raise NotImplementedError
 
@@ -212,11 +184,12 @@ class Spec:
         translation, and the whole point of the manifest being a parquet
         table is that these very comparisons ALSO prune the blocks table's
         own row groups (payload bytes of skipped blocks are then never
-        read). Semantics identical to ``~tri().f`` — tests assert both."""
+        read). Selects the same blocks as ``chunkstats.unit_tri`` over
+        the manifest — tests assert both."""
         return self.keep(opts)
 
     # structural NOT-f (keep) and NOT-t (not definitely true), with
-    # Unknown mapping to True in both — the De Morgan duals of tri():
+    # Unknown mapping to True in both — De Morgan duals of each other:
     #   keep(And)=all keep_i      not_true(And)=any not_true_i
     #   keep(Or)=any keep_i       not_true(Or)=all not_true_i
     #   keep(Not x)=not_true(x)   not_true(Not x)=keep(x)
@@ -232,15 +205,6 @@ def _sc(name: str) -> Column:
     dotted flat names ('meta.lang__min'), which F.col would otherwise
     parse as struct access — backticks force a literal lookup."""
     return F.col(f"`{name}`")
-
-
-def _stats(col: str):
-    return (
-        _sc(f"{col}__min"),
-        _sc(f"{col}__max"),
-        F.coalesce(_sc(f"{col}__nulls"), F.lit(0)),
-        F.col("n_rows").cast("long"),
-    )
 
 
 def _raw_stats(col: str):
@@ -298,48 +262,6 @@ class Cmp(Spec):
     value: object
 
     _SQL_OP = {"eq": "=", "ne": "<>", "lt": "<", "le": "<=", "gt": ">", "ge": ">="}
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        smin, smax, nulls, nrows = _stats(self.col)
-        v = F.lit(self.value)
-        no_nulls = nulls == 0
-        op = self.op
-        if op == "eq":
-            f = (smin > v) | (smax < v)
-            t = (smin == v) & (smax == v) & no_nulls
-        elif op == "ne":
-            f = (smin == v) & (smax == v) & no_nulls
-            t = ((smin > v) | (smax < v)) & no_nulls
-        elif op == "lt":
-            f = smin >= v
-            t = (smax < v) & no_nulls
-        elif op == "le":
-            f = smin > v
-            t = (smax <= v) & no_nulls
-        elif op == "gt":
-            f = smax <= v
-            t = (smin > v) & no_nulls
-        elif op == "ge":
-            f = smax < v
-            t = (smin >= v) & no_nulls
-        else:  # pragma: no cover
-            raise ValueError(op)
-        if op == "eq" and isinstance(self.value, (str, bytes)):
-            # dictionary definite-absence (/root/reference/src/prune/
-            # dictionary.rs:8-70): value outside the exact per-block
-            # distinct set => every non-null row is F, null rows N —
-            # sound for the f-side invariant (f => no row evaluates TRUE)
-            # under any Not nesting, since Not swaps into the t-side
-            # invariant (t => no row evaluates FALSE)… which "all rows
-            # F-or-N" also satisfies after the swap maps F to T.
-            if opts.use_dict:
-                d = _dict_col(self.col)
-                f = f | (d.isNotNull() & ~F.array_contains(d, self.value))
-            # bloom definite-absence (aisle BloomFilterEq,
-            # /root/reference/src/prune/bloom.rs:9-54)
-            if opts.use_bloom:
-                f = f | _bloom_absent(self.col, (self.value,))
-        return Tri(_c(t), _c(f))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         smin, smax, nulls, _ = _raw_stats(self.col)
@@ -421,9 +343,6 @@ class Between(Spec):
     def _parts(self) -> Spec:
         return And([Cmp(self.col, "ge", self.low), Cmp(self.col, "le", self.high)])
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return self._parts().tri(opts)
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return self._parts().keep(opts)
 
@@ -444,18 +363,6 @@ class Between(Spec):
 class InList(Spec):
     col: str
     values: tuple
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        # OR of Eq (short-circuit semantics come from the Kleene fold,
-        # /root/reference/src/prune/in_list.rs:6-45)
-        base = tri_or([Cmp(self.col, "eq", v).tri(opts) for v in self.values])
-        if opts.use_dict and all(isinstance(v, (str, bytes)) for v in self.values) and self.values:
-            d = _dict_col(self.col)
-            absent_all = d.isNotNull() & ~F.arrays_overlap(
-                d, F.array(*[F.lit(v) for v in self.values])
-            )
-            base = Tri(base.t, base.f | _c(absent_all))
-        return base
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         smin, smax, _, _ = _raw_stats(self.col)
@@ -498,15 +405,6 @@ class IsNull(Spec):
     col: str
     negated: bool = False
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        _, _, nulls_raw, nrows = _stats(self.col)
-        nulls = _sc(f"{self.col}__nulls")  # keep NULL-able: missing stats => Unknown
-        t = nulls == nrows
-        f = nulls == 0
-        if self.negated:
-            t, f = f, t
-        return Tri(_c(t), _c(f))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         nulls = _sc(f"{self.col}__nulls")
         nrows = F.col("n_rows").cast("long")
@@ -536,27 +434,6 @@ class IsNull(Spec):
 class StartsWith(Spec):
     col: str
     prefix: str
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        # prefix -> range rewrite [p, next_prefix(p))
-        # (/root/reference/src/prune/starts_with.rs:4-69)
-        smin, smax, nulls, _ = _stats(self.col)
-        if self.prefix == "":
-            # every non-null string starts with ""
-            return Tri(_c(nulls == 0), F.lit(False))
-        p = F.lit(self.prefix)
-        np_ = next_prefix(self.prefix)
-        f = smax < p
-        t = (smin >= p) & (nulls == 0)
-        if np_ is None:
-            # all-U+10FFFF prefix: s >= p  <=>  s startswith p, so the
-            # lower bound alone is exact (overflow case,
-            # /root/reference/src/prune/strings.rs:13-27)
-            pass
-        else:
-            f = f | (smin >= F.lit(np_))
-            t = t & (smax < F.lit(np_))
-        return Tri(_c(t), _c(f))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         smin, smax, _, _ = _raw_stats(self.col)
@@ -612,27 +489,6 @@ class ArrayAny(Spec):
 
     def _estats(self):
         return _sc(f"{self.col}__elem_min"), _sc(f"{self.col}__elem_max")
-
-    def _f(self) -> Column:
-        emin, emax = self._estats()
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            return (emin > v) | (emax < v)
-        if op == "ne":
-            return (emin == v) & (emax == v)
-        if op == "lt":
-            return emin >= v
-        if op == "le":
-            return emin > v
-        if op == "gt":
-            return emax <= v
-        if op == "ge":
-            return emax < v
-        raise ValueError(op)  # pragma: no cover
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), _c(self._f()))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         emin, emax = self._estats()
@@ -699,29 +555,6 @@ class ArrayLen(Spec):
             _sc(f"{self.col}__len_max"),
             _sc(f"{self.col}__nulls"),
         )
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        smin, smax, nulls = self._stats()
-        v = F.lit(int(self.value))
-        no_nulls = F.coalesce(nulls, F.lit(0)) == 0
-        op = self.op
-        if op == "eq":
-            f = (smin > v) | (smax < v)
-            t = (smin == v) & (smax == v) & no_nulls
-        elif op == "ne":
-            f = (smin == v) & (smax == v) & no_nulls
-            t = ((smin > v) | (smax < v)) & no_nulls
-        elif op == "lt":
-            f, t = smin >= v, (smax < v) & no_nulls
-        elif op == "le":
-            f, t = smin > v, (smax <= v) & no_nulls
-        elif op == "gt":
-            f, t = smax <= v, (smin > v) & no_nulls
-        elif op == "ge":
-            f, t = smax < v, (smin >= v) & no_nulls
-        else:  # pragma: no cover
-            raise ValueError(op)
-        return Tri(_c(t), _c(f))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         smin, smax, nulls = self._stats()
@@ -794,9 +627,6 @@ class Like(Spec):
     col: str
     pattern: str
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), F.lit(False))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
 
@@ -825,9 +655,6 @@ class Regexp(Spec):
 
     col: str
     pattern: str
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), F.lit(False))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
@@ -879,30 +706,6 @@ class MapKeyCmp(Spec):
         kmax = F.element_at(F.map_from_arrays(keys, _sc(f"{self.col}__kmax")), k)
         return keys, kmin, kmax
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        keys, kmin, kmax = self._kstats()
-        absent = keys.isNotNull() & ~F.array_contains(keys, F.lit(self.key))
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            rng = (kmin > v) | (kmax < v)
-        elif op == "ne":
-            # all present values == v => ne is FALSE for key-bearing rows
-            # and NULL for the rest: no row TRUE (null values for the key
-            # evaluate NULL too, so the min==max==v evidence stays sound)
-            rng = (kmin == v) & (kmax == v)
-        elif op == "lt":
-            rng = kmin >= v
-        elif op == "le":
-            rng = kmin > v
-        elif op == "gt":
-            rng = kmax <= v
-        elif op == "ge":
-            rng = kmax < v
-        else:  # pragma: no cover
-            raise ValueError(op)
-        return Tri(F.lit(False), _c(absent | rng))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         keys, kmin, kmax = self._kstats()
         out = _or_null(F.array_contains(keys, F.lit(self.key)), keys)
@@ -952,9 +755,6 @@ class MapKeyCmp(Spec):
 class And(Spec):
     parts: list
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return tri_and([p.tri(opts) for p in self.parts])
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         out = self.parts[0].keep(opts)
         for p in self.parts[1:]:
@@ -983,9 +783,6 @@ class And(Spec):
 @dataclass(frozen=True)
 class Or(Spec):
     parts: list
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return tri_or([p.tri(opts) for p in self.parts])
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         out = self.parts[0].keep(opts)
@@ -1016,10 +813,6 @@ class Or(Spec):
 class Not(Spec):
     inner: Spec
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        i = self.inner.tri(opts)
-        return Tri(i.f, i.t)
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return self.inner.not_true(opts)
 
@@ -1038,9 +831,6 @@ class Not(Spec):
 
 @dataclass(frozen=True)
 class AlwaysTrue(Spec):
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(True), F.lit(False))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
 

@@ -1,6 +1,6 @@
 """The engine as a Spark data source: ``spark.read.format("aisle")`` with
-advisory filter pushdown (planning-time block pruning through the DuckDB
-evidence dialect) and ``df.write.format("aisle")`` with manifest-commit
+advisory filter pushdown (planning-time block pruning through the numpy
+tri-state evaluator) and ``df.write.format("aisle")`` with manifest-commit
 semantics."""
 
 from __future__ import annotations
@@ -35,6 +35,33 @@ def encoded_dir(spark, tmp_path_factory):
     write_encoded(blocks, out, arrow_schema_of(df))
     register(spark)
     return df, out
+
+
+def test_planning_never_imports_duckdb(encoded_dir):
+    """Read planning is JVM-free AND DuckDB-free: a pruned plan built in a
+    fresh interpreter leaves duckdb unimported."""
+    import subprocess
+    import sys
+
+    _, out = encoded_dir
+    code = (
+        "import sys\n"
+        "from aisle_spark.datasource import AisleReader\n"
+        f"parts = AisleReader({out!r}, where=\"source = 'code' AND n_tok > 100\")"
+        ".partitions()\n"
+        "rows = [r for p in parts for _f, r in p.entries()]\n"
+        "assert rows and all(r is not None for r in rows), rows\n"
+        "print('duckdb' in sys.modules)\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "False"
 
 
 class TestRead:

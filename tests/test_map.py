@@ -163,14 +163,21 @@ class TestPruning:
         blocks.unpersist()
 
     def test_tri_matches_keep_duals(self, spark):
+        from aisle_spark.schema import specs_for_schema
+        from tests.test_prune_sql import evaluator_blocks
+
         df, blocks, schema = self._blocks(spark)
+        stats = blocks.select(
+            [c for c in blocks.columns if not c.endswith("__payload")]
+        ).toArrow()
         for spec in [
             col("props").map_key("k").__le__(500),
             ~(col("props").map_key("key_0") == 3),
             col("props").map_key("nope") > 0,
         ]:
-            t = blocks.filter(~spec.tri().f).count()
-            k = blocks.filter(spec.keep_blocks()).count()
+            t = evaluator_blocks(stats, specs_for_schema(schema), spec)
+            kept = blocks.filter(spec.keep_blocks()).select("block_id").collect()
+            k = {r.block_id for r in kept}
             assert t == k
         blocks.unpersist()
 

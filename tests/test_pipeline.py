@@ -218,9 +218,9 @@ class TestInlineEncode:
 
 
 class TestKeepEqualsTri:
-    """The pushdown-friendly structural keep() must agree with the
-    coalesce-based tri-state reference implementation on every predicate
-    shape, including missing-stats blocks."""
+    """The pushdown-friendly structural keep() must agree with the numpy
+    tri-state evaluator (``chunkstats.unit_tri``, the planner's block
+    tier) on every predicate shape, including missing-stats blocks."""
 
     SPECS_TO_CHECK = [
         col("n_tok") > 9,
@@ -248,6 +248,8 @@ class TestKeepEqualsTri:
     def test_keep_matches_not_f(self, spark):
         from pyspark.sql import functions as F
 
+        from tests.test_prune_sql import evaluator_blocks
+
         blocks = _two_block_manifest(spark)
         # add a missing-stats variant of block 0
         damaged = blocks
@@ -255,17 +257,24 @@ class TestKeepEqualsTri:
             damaged = damaged.withColumn(
                 c, F.when(F.col("block_id") == 0, F.lit(None)).otherwise(F.col(c))
             )
-        for frame in (blocks, damaged):
+        # and a variant whose block 0 claims NULL rows: the null-count
+        # terms of ne / NOT eq / IS NULL must then keep it on both sides
+        nullish = blocks
+        for c in ("n_tok__nulls", "source__nulls", "doc_id__nulls"):
+            nullish = nullish.withColumn(
+                c, F.when(F.col("block_id") == 0, F.lit(1)).otherwise(F.col(c))
+            )
+        for frame in (blocks, damaged, nullish):
+            stats = frame.select(
+                [f"`{c}`" for c in frame.columns if not c.endswith("__payload")]
+            ).toArrow()
             for spec in self.SPECS_TO_CHECK:
                 a = sorted(
                     r.block_id
                     for r in frame.filter(spec.keep_blocks()).select("block_id").collect()
                 )
-                b = sorted(
-                    r.block_id
-                    for r in frame.filter(~spec.tri().f).select("block_id").collect()
-                )
-                assert a == b, f"keep() != ~tri().f for {spec!r}: {a} vs {b}"
+                b = sorted(evaluator_blocks(stats, SPECS, spec))
+                assert a == b, f"keep() != evaluator for {spec!r}: {a} vs {b}"
 
 
 class TestPruneReport:

@@ -1,72 +1,84 @@
-"""Differential test of the DuckDB-dialect evidence predicates: for
-randomized predicate trees (the same generator the Catalyst soundness
-sweep uses) over one encoded manifest, ``prune_sql.keep_sql`` through
-DuckDB must select exactly the block set ``filterspec.keep()`` selects
-through Catalyst — both with evidence on and off."""
+"""Differential test of the planner's block tier: for randomized predicate
+trees (the same generator the Catalyst soundness sweep uses) over one
+encoded manifest, the numpy evaluator ``chunkstats.unit_tri``, run over
+the manifest as the DataSource planner reads it (pyarrow, stat columns
+mapped into the evaluator's domains), must select exactly the block set
+``filterspec.keep()`` selects through Catalyst — both with evidence on
+and off."""
 
 from __future__ import annotations
 
+import glob
 import random
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from aisle_spark.filterspec import PruneOptions, col
+from aisle_spark.chunkstats import stat_domain, unit_tri
+from aisle_spark.datasource import _load_stats
+from aisle_spark.filterspec import PruneOptions, col, utc_normalize
 from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
-from aisle_spark.prune_sql import keep_sql
-from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
+from aisle_spark.schema import specs_for_schema, synth_batch
 
 from tests.test_random_predicates import _rand_spec
+
+_NOT_STATS = ("__payload", "__chunk_min", "__chunk_max", "__chunk_nulls")
+
+
+def manifest_table(out: str) -> pa.Table:
+    """Every block row of an encoded dir, read through the planner's own
+    stat loader."""
+    tables = []
+    for f in sorted(glob.glob(f"{out}/*.parquet")):
+        names = [n for n in pq.read_schema(f).names if not n.endswith(_NOT_STATS)]
+        tables.append(_load_stats(None, f, names))
+    return pa.concat_tables(tables, promote_options="default")
+
+
+def evaluator_blocks(tbl: pa.Table, specs, spec, opts=PruneOptions()) -> set:
+    """block_ids the numpy evaluator keeps over manifest rows ``tbl``."""
+    stats = {n: stat_domain(tbl.column(n)) for n in tbl.column_names}
+    kinds = {s.name: s for s in specs}
+    n_rows = stats["n_rows"].to_numpy(zero_copy_only=False)
+    _, f = unit_tri(utc_normalize(spec), stats, kinds, n_rows, opts)
+    return set(np.asarray(tbl.column("block_id"))[~f].tolist())
+
+
+def _catalyst(blocks, spec, opts=PruneOptions()) -> set:
+    return {r.block_id for r in blocks.filter(spec.keep(opts)).select("block_id").collect()}
+
+
+def _encode(df, out: str, **kw):
+    blocks = encode_table(df, **kw).cache()
+    write_encoded(blocks, out, arrow_schema_of(df))
+    return blocks, manifest_table(out), specs_for_schema(arrow_schema_of(df))
 
 
 @pytest.fixture(scope="module")
 def manifest(spark, tmp_path_factory):
-    """Encoded blocks both as a cached DataFrame (Catalyst side) and as a
-    parquet directory (DuckDB side)."""
+    """Encoded blocks both as a cached DataFrame (Catalyst side) and as
+    the planner's pyarrow read of the written parquet (evaluator side)."""
     df = spark.createDataFrame(pa.Table.from_batches([synth_batch(3, 3000)]))
-    blocks = encode_table(
-        df, parts=4, block_rows=256, sort_cols=["source", "n_tok"]
-    ).cache()
     out = str(tmp_path_factory.mktemp("prunesql") / "enc")
-    write_encoded(blocks, out, arrow_schema_of(df))
-    return blocks, out
-
-
-def _duck(out: str):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    con.execute(
-        f"CREATE VIEW m AS SELECT * FROM read_parquet('{out}/*.parquet')"
-    )
-    return con
+    return _encode(df, out, parts=4, block_rows=256, sort_cols=["source", "n_tok"])
 
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
 def test_keep_sql_matches_catalyst(spark, manifest, seed):
-    blocks, out = manifest
-    con = _duck(out)
+    blocks, tbl, specs = manifest
     rng = random.Random(seed)
     for _ in range(20):
         spec = _rand_spec(rng)
         for opts in (PruneOptions(), PruneOptions(use_dict=False, use_bloom=False)):
-            cat = {
-                r.block_id for r in blocks.filter(spec.keep(opts)).select("block_id").collect()
-            }
-            sql = keep_sql(spec, opts)
-            duck = {
-                r[0]
-                for r in con.execute(
-                    f"SELECT block_id FROM m WHERE {sql}"
-                ).fetchall()
-            }
-            assert duck == cat, f"seed={seed} spec={spec!r}\nsql={sql}"
+            got = evaluator_blocks(tbl, specs, spec, opts)
+            assert got == _catalyst(blocks, spec, opts), f"seed={seed} spec={spec!r} {opts}"
 
 
 def test_keep_sql_typed_operands(spark, tmp_path):
     """Decimal, timestamp, date, duration, binary, map-key and nested
-    struct leaves through both dialects."""
+    struct leaves through both evaluators."""
     import datetime as dt
     from decimal import Decimal
 
@@ -109,12 +121,11 @@ def test_keep_sql_typed_operands(spark, tmp_path):
         ]
     )
     df = spark.createDataFrame(rows, sch)
-    blocks = encode_table(df, parts=2, block_rows=256, sort_cols=["id"]).cache()
-    out = str(tmp_path / "enc")
-    write_encoded(blocks, out, arrow_schema_of(df))
-    con = _duck(out)
+    blocks, tbl, specs = _encode(
+        df, str(tmp_path / "enc"), parts=2, block_rows=256, sort_cols=["id"]
+    )
 
-    specs = [
+    checks = [
         col("price") > Decimal("333.33"),
         col("price").between(Decimal("100.00"), Decimal("200.00")),
         col("ts") >= dt.datetime(2024, 1, 1, 12, 0),
@@ -131,18 +142,14 @@ def test_keep_sql_typed_operands(spark, tmp_path):
         col("price").is_null(),
         col("blob").is_not_null() & (col("d") != dt.date(2024, 1, 5)),
     ]
-    for spec in specs:
-        cat = {
-            r.block_id for r in blocks.filter(spec.keep()).select("block_id").collect()
-        }
-        sql = keep_sql(spec)
-        duck = {r[0] for r in con.execute(f"SELECT block_id FROM m WHERE {sql}").fetchall()}
-        assert duck == cat, f"spec={spec!r}\nsql={sql}"
+    for spec in checks:
+        assert evaluator_blocks(tbl, specs, spec) == _catalyst(blocks, spec), f"spec={spec!r}"
+    blocks.unpersist()
 
 
 def test_keep_sql_adversarial_strings(spark, tmp_path):
-    """Values containing quotes/backslashes/unicode must render into valid
-    DuckDB SQL selecting the same blocks as Catalyst."""
+    """Values containing quotes/backslashes/unicode must select the same
+    blocks as Catalyst."""
     from pyspark.sql import types as T
 
     nasty = ["o'brien", "100%", "back\\slash", "émoji🙂", "''", "plain"]
@@ -150,18 +157,10 @@ def test_keep_sql_adversarial_strings(spark, tmp_path):
     df = spark.createDataFrame(
         rows, T.StructType([T.StructField("id", T.LongType()), T.StructField("s", T.StringType())])
     )
-    blocks = encode_table(df, parts=2, block_rows=64, sort_cols=["s"]).cache()
-    out = str(tmp_path / "enc")
-    write_encoded(blocks, out, arrow_schema_of(df))
-    con = _duck(out)
+    blocks, tbl, specs = _encode(
+        df, str(tmp_path / "enc"), parts=2, block_rows=64, sort_cols=["s"]
+    )
     for v in nasty:
         for spec in (col("s") == v, col("s") != v, col("s").isin(v), col("s").startswith(v[:3])):
-            cat = {r.block_id for r in blocks.filter(spec.keep()).select("block_id").collect()}
-            duck = {
-                r[0]
-                for r in con.execute(
-                    f"SELECT block_id FROM m WHERE {keep_sql(spec)}"
-                ).fetchall()
-            }
-            assert duck == cat, f"{v!r} {spec!r}"
+            assert evaluator_blocks(tbl, specs, spec) == _catalyst(blocks, spec), f"{v!r} {spec!r}"
     blocks.unpersist()

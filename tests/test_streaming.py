@@ -17,24 +17,24 @@ from aisle_spark.pipeline import read_encoded, scan
 from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
 from aisle_spark.streaming import _read_manifest, encode_stream
 
-BASE = "/tmp/aisle_stream_test"
-
-
 @pytest.fixture()
-def dirs():
-    shutil.rmtree(BASE, ignore_errors=True)
-    src = os.path.join(BASE, "src")
-    out = os.path.join(BASE, "enc")
-    ckp = os.path.join(BASE, "ckp")
+def dirs(tmp_path):
+    src = os.path.join(tmp_path, "src")
+    out = os.path.join(tmp_path, "enc")
+    ckp = os.path.join(tmp_path, "ckp")
     os.makedirs(src)
-    yield src, out, ckp
-    shutil.rmtree(BASE, ignore_errors=True)
+    return src, out, ckp
 
 
 def _drop(src: str, name: str, start: int, n: int) -> None:
-    pq.write_table(
-        pa.Table.from_batches([synth_batch(start, n)]), os.path.join(src, name)
-    )
+    """Place a source file ATOMICALLY, as Spark's file source requires: a
+    running stream lists the directory every few ms, and a file it lists
+    while still being written is taken at its listed (partial, often
+    zero) length, then marked seen and never read again. Write under a
+    hidden name (the file source skips ``.``-prefixed files) and rename."""
+    tmp = os.path.join(src, f".{name}.tmp")
+    pq.write_table(pa.Table.from_batches([synth_batch(start, n)]), tmp)
+    os.replace(tmp, os.path.join(src, name))
 
 
 def test_stream_encode_commits_and_scans(spark, dirs):
