@@ -555,7 +555,7 @@ _DS_PM_DIRS: dict[str, str] = {}
 def _ds_propsmap_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events with props as a REAL map column, written through
     format("aisle") — per-file map key-set evidence rides the manifest
-    (datasource._merge_file_stat map_cols)."""
+    (datasource.fold_file_stats)."""
     from aisle_spark.datasource import register
 
     register(spark)

@@ -10,7 +10,7 @@ Usage (north rule: "runs via spark-submit --py-files"):
 
   spark-submit --py-files aisle_spark.zip -m aisle_spark.cli … \
       encode --input /data/tokens --output /data/encoded \
-             --parts 4096 --sort source,n_tok [--resumable --groups 64]
+             --parts 4096 --sort source,n_tok [--resume]
 
   spark-submit --py-files aisle_spark.zip -m aisle_spark.cli … \
       scan --table /data/encoded \
@@ -25,7 +25,6 @@ ONLY the `col` builder in scope.
 from __future__ import annotations
 
 import argparse
-import sys
 
 
 def _session(app: str):
@@ -45,44 +44,18 @@ def _session(app: str):
 
 
 def cmd_encode(args) -> None:
-    from aisle_spark.pipeline import (
-        arrow_schema_of,
-        encode_files_inline,
-        _write_schema_sidecar,
-    )
+    from aisle_spark.pipeline import encode_files_direct
 
     spark, owns = _session("aisle-encode")
-    sort_cols = args.sort.split(",") if args.sort else None
-    if args.resumable:
-        from aisle_spark.checkpoint import encode_resumable
-
-        df = spark.read.parquet(args.input)
-        ran = encode_resumable(
-            df,
-            args.output,
-            parts=args.parts,
-            groups=args.groups,
-            sort_cols=sort_cols,
-        )
-        print(f"encoded {ran} group(s) this run (0 = already complete)")
-    elif args.direct:
-        from aisle_spark.pipeline import encode_files_direct
-
-        committed = encode_files_direct(
-            spark,
-            args.input,
-            args.output,
-            parts=args.parts,
-            sort_cols=sort_cols,
-            resume=args.resume,
-        )
-        print(f"committed {len(committed)} block file(s)")
-    else:
-        blocks, schema = encode_files_inline(
-            spark, args.input, parts=args.parts, sort_cols=sort_cols
-        )
-        blocks.write.mode(args.mode).option("compression", "none").parquet(args.output)
-        _write_schema_sidecar(args.output, schema)
+    committed = encode_files_direct(
+        spark,
+        args.input,
+        args.output,
+        parts=args.parts,
+        sort_cols=args.sort.split(",") if args.sort else None,
+        resume=args.resume,
+    )
+    print(f"committed {len(committed)} block file(s)")
     if owns:
         spark.stop()
 
@@ -322,18 +295,10 @@ def main(argv: list[str] | None = None) -> None:
     e.add_argument("--output", required=True)
     e.add_argument("--parts", type=int, default=256)
     e.add_argument("--sort", default=None, help="comma-separated sort columns")
-    e.add_argument("--mode", default="overwrite")
-    e.add_argument("--resumable", action="store_true")
-    e.add_argument("--groups", type=int, default=16)
-    e.add_argument(
-        "--direct",
-        action="store_true",
-        help="python tasks write block parquet directly (at-scale path)",
-    )
     e.add_argument(
         "--resume",
         action="store_true",
-        help="with --direct: skip inputs already committed in _done/",
+        help="skip inputs already committed in _done/",
     )
     e.set_defaults(fn=cmd_encode)
 

@@ -27,14 +27,13 @@ a uniform hash, so AQE's coalescing and skew handling apply cleanly.
 
 from __future__ import annotations
 
-import struct
 from typing import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aisle_spark.blocks import cluster_block_rows, decode_block, encode_block
+from aisle_spark.blocks import decode_block, encode_block
 from aisle_spark.filterspec import Spec
 from aisle_spark.schema import (
     ColumnSpec,
@@ -73,37 +72,6 @@ def arrow_schema_of(df: DataFrame) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(df.schema)
-
-
-def _block_slices(
-    tbl: pa.Table, specs: list[ColumnSpec], block_rows: int, max_values: int
-) -> Iterator[pa.Table]:
-    """Split a partition's rows into blocks bounded by rows AND flattened
-    list values (vectorized boundary computation, no per-row Python)."""
-    import numpy as np
-
-    n = tbl.num_rows
-    list_cols = [s.name for s in specs if s.kind in ("intlist", "floatlist")]
-    if not list_cols:
-        for lo in range(0, n, block_rows):
-            yield tbl.slice(lo, min(block_rows, n - lo))
-        return
-    # combined per-row value weight across list columns
-    weight = np.zeros(n, dtype=np.int64)
-    for c in list_cols:
-        col = tbl.column(c)
-        lens = col.combine_chunks().value_lengths().to_numpy(zero_copy_only=False)
-        weight += np.nan_to_num(lens, nan=0).astype(np.int64)
-    cum = np.cumsum(weight)
-    lo = 0
-    while lo < n:
-        hi_rows = min(lo + block_rows, n)
-        base = cum[lo - 1] if lo else 0
-        # first index where cumulative values exceed the cap
-        hi_vals = int(np.searchsorted(cum, base + max_values, side="right"))
-        hi = max(lo + 1, min(hi_rows, hi_vals))
-        yield tbl.slice(lo, hi - lo)
-        lo = hi
 
 
 def _order_and_slice(
@@ -193,40 +161,8 @@ def encode_table(
       balances BETWEEN partitions; sorting clusters WITHIN them — the
       same layout trick as parquet's sortWithinPartitions + row groups.
     """
-    salted = with_part_id(df, parts, salt_cols)
-    return encode_salted(salted, sort_cols, block_rows, max_values)
-
-
-def with_part_id(
-    df: DataFrame, parts: int, salt_cols: list[str] | None = None
-) -> DataFrame:
-    """Assign the salted partition id: xxhash64 over high-cardinality key
-    columns mod ``parts``. Uniform regardless of source skew or document
-    length — the explicit skew defense of the north rule."""
     specs = specs_for_schema(arrow_schema_of(df))
-    salt_cols = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-    return df.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(parts)).cast("int"),
-    )
-
-
-def encode_salted(
-    salted: DataFrame,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-) -> DataFrame:
-    """Encode a DataFrame that already carries ``part_id``."""
-    df = salted.drop("part_id")
-    aschema = arrow_schema_of(df)
-    specs = specs_for_schema(aschema)
     out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
     sort_keys = [(c, "ascending") for c in (sort_cols or [])]
 
     def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
@@ -241,144 +177,173 @@ def encode_salted(
             rows.append(encode_block(specs, block, part_id, block_id))
         return pa.Table.from_pylist(rows, schema=out_schema)
 
-    return salted.groupBy("part_id").applyInArrow(encode_group, schema=out_spark)
-
-
-def encode_table_inline(
-    df: DataFrame,
-    parts: int = 64,
-    salt_cols: list[str] | None = None,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-    redistribute: bool = True,
-) -> DataFrame:
-    """Encode WITHOUT shuffling raw rows: a narrow ``mapInArrow`` pass
-    compresses each INPUT SPLIT into blocks (sorting rows within the split
-    first, so per-block stats stay tight), then the mandated salted
-    repartition runs over the already-compressed blocks — ~6x fewer bytes
-    cross the JVM/Python boundary and the shuffle.
-
-    Why this is the at-scale design: at 100 TB the raw-row shuffle moves
-    100 TB twice (shuffle write + read) and row<->Arrow converts every
-    token array in the JVM (GC-bound, measured anti-scaling locally);
-    shuffling compressed blocks moves ~25 TB once, and input splits are
-    already byte-balanced by ``spark.sql.files.maxPartitionBytes`` so
-    long-document skew never concentrates in one task. part_id remains
-    the salted hash of (salt_cols) of the block's first row — block-level
-    salting — so lineage/resume grouping is unchanged.
-    """
-    aschema = arrow_schema_of(df)
-    specs = specs_for_schema(aschema)
-    out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
-    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-
-    def encode_split(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_threads()
-        import zlib
-
-        from pyspark import TaskContext
-
-        got = list(batches)
-        if not got:
-            return
-        tbl = flatten_table(pa.Table.from_batches(got))
-        # block_id = (task partition, local sequence): unique by
-        # construction — first-row salt hashes collide whenever sorted
-        # runs span blocks (ADVICE r1); the salt hash decides ONLY part_id
-        task_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-        rows = []
-        for seq, block in enumerate(
-            _order_and_slice(tbl, specs, sort_keys, block_rows, max_values)
-        ):
-            first = {c: block.column(c)[0].as_py() for c in salt_cols_eff}
-            key = "\x1f".join(str(first[c]) for c in salt_cols_eff).encode()
-            part_id = int(zlib.crc32(key) % parts)
-            block_id = (task_id << 24) | seq
-            rows.append(encode_block(specs, block, part_id, block_id))
-        yield from pa.Table.from_pylist(rows, schema=out_schema).to_batches()
-
-    blocks = df.mapInArrow(encode_split, out_spark)
-    if redistribute:
-        # the salted repartition of the north rule, over compressed blocks;
-        # AQE right-sizes the shuffle partitions
-        blocks = blocks.repartition(F.col("part_id"))
-    return blocks
-
-
-def encode_files_inline(
-    spark: SparkSession,
-    input_path: str,
-    parts: int = 64,
-    salt_cols: list[str] | None = None,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-    redistribute: bool = True,
-) -> tuple[DataFrame, pa.Schema]:
-    """Fastest encode path: Spark schedules; each python task reads its
-    parquet file directly with pyarrow (C++ decode straight to Arrow — the
-    JVM never materializes the raw rows at all) and emits compressed
-    blocks. Profiling here showed the JVM parquet->InternalRow->Arrow
-    conversion of array columns is the hard throughput ceiling (it doesn't
-    scale past ~8 cores); with pyarrow-native reads the encode scales like
-    the raw numpy codecs. At cluster scale the same pattern reads from
-    S3/HDFS via pyarrow.fs inside executors."""
-    files, specs, in_schema = _input_files(input_path)
-    out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
-    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-    # pyarrow reads the ORIGINAL top-level columns; structs flatten after
-    names = [f.name for f in in_schema if not f.name.startswith("_")]
-
-    def encode_file(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_threads()
-        import zlib
-
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        task_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-        seq = 0
-        for b in batches:
-            for path in b.column(0).to_pylist():  # per input FILE
-                tbl = flatten_table(pq.read_table(path, columns=names))
-                rows = []
-                for block in _order_and_slice(
-                    tbl, specs, sort_keys, block_rows, max_values
-                ):
-                    first = {c: block.column(c)[0].as_py() for c in salt_cols_eff}
-                    key = "\x1f".join(str(first[c]) for c in salt_cols_eff).encode()
-                    rows.append(
-                        encode_block(
-                            specs,
-                            block,
-                            int(zlib.crc32(key) % parts),
-                            (task_id << 24) | seq,
-                        )
-                    )
-                    seq += 1
-                yield from pa.Table.from_pylist(rows, schema=out_schema).to_batches()
-
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        len(files)
+    return (
+        with_part_id(df, parts, salt_cols)
+        .groupBy("part_id")
+        .applyInArrow(encode_group, schema=blocks_spark_schema(specs))
     )
-    blocks = fdf.mapInArrow(encode_file, out_spark)
-    if redistribute:
-        blocks = blocks.repartition(F.col("part_id"))
-    in_arrow = pa.schema([pa.field(s.name, s.arrow_type) for s in specs])
-    return blocks, in_arrow
+
+
+def _default_salt_cols(specs: list[ColumnSpec]) -> list[str]:
+    return [
+        s.name
+        for s in specs
+        if s.kind in ("string", "int", "timestamp") and "." not in s.name
+    ]
+
+
+def with_part_id(
+    df: DataFrame, parts: int, salt_cols: list[str] | None = None
+) -> DataFrame:
+    """Assign the salted partition id: xxhash64 over high-cardinality key
+    columns mod ``parts``. Uniform regardless of source skew or document
+    length — the explicit skew defense of the north rule."""
+    salt_cols = salt_cols or _default_salt_cols(
+        specs_for_schema(arrow_schema_of(df))
+    )
+    return df.withColumn(
+        "part_id",
+        F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(parts)).cast("int"),
+    )
+
+
+# manifest stat columns a block file's per-file bounds fold from
+_STAT_SUFFIXES = ("__min", "__max", "__nulls", "__keys", "__kmin")
+
+
+def write_block_file(
+    tables: Iterable[pa.Table],
+    specs: list[ColumnSpec],
+    out_path: str,
+    fname: str,
+    *,
+    compression: str,
+    flush_blocks: int,
+    block_base: int,
+    sort_keys: list | None = None,
+    block_rows: int = DEFAULT_BLOCK_ROWS,
+    max_values: int = DEFAULT_MAX_VALUES,
+    parts: int = 1,
+    salt_cols: list[str] | None = None,
+    fs=None,
+) -> dict | None:
+    """The ONE task-side block-file writer: each input table is flattened,
+    ordered (``_order_and_slice``), encoded block by block, and streamed
+    into ``out_path/fname`` as one parquet row group per ``flush_blocks``
+    blocks, so the task's block buffer is bounded regardless of input
+    size. Locally the file is written under a hidden tmp name and renamed
+    into place; on an object store (``fs`` given) the uniquely named
+    final object is written directly — visibility is governed by the
+    manifest alone. The file's manifest bounds are folded in the task
+    from the blocks' stat columns (``datasource.fold_file_stats``).
+
+    ``block_id`` is ``(block_base << 24) | seq``; ``part_id`` is the crc32
+    of the block's first-row ``salt_cols`` mod ``parts`` (0 without salt
+    columns). Returns the file's commit metadata — file, blocks, rows,
+    encoded/raw bytes, per-stage wall seconds and ``stats`` — or None
+    when no block was written (then no file exists)."""
+    import os
+    import time
+    import zlib
+
+    import pyarrow.parquet as pq
+
+    from aisle_spark.datasource import fold_file_stats
+
+    out_schema = blocks_arrow_schema(specs)
+    stat_names = [
+        n for n in out_schema.names if n == "n_rows" or n.endswith(_STAT_SUFFIXES)
+    ]
+    final = f"{out_path.rstrip('/')}/{fname}"
+    target = final if fs is not None else f"{out_path.rstrip('/')}/.{fname}.tmp"
+    writer = None
+    seq = n_rows = enc_bytes = raw_bytes = 0
+    pending: list[dict] = []
+    stat_chunks: list[pa.Table] = []
+    # per-stage wall (read/sort/encode/write): the encode sidecars and
+    # the scaling gate's per-stage table aggregate these
+    stages = {"read_sec": 0.0, "sort_sec": 0.0, "encode_sec": 0.0, "write_sec": 0.0}
+
+    def flush() -> None:
+        nonlocal writer, n_rows, enc_bytes, raw_bytes
+        ts = time.time()
+        if writer is None:
+            writer = pq.ParquetWriter(
+                target, out_schema, compression=compression, filesystem=fs
+            )
+        chunk = pa.Table.from_pylist(pending, schema=out_schema)
+        writer.write_table(chunk, row_group_size=flush_blocks)
+        stages["write_sec"] += time.time() - ts
+        stat_chunks.append(chunk.select(stat_names))
+        n_rows += sum(r["n_rows"] for r in pending)
+        enc_bytes += sum(r[c] for r in pending for c in r if c.endswith("__enc_bytes"))
+        raw_bytes += sum(r[c] for r in pending for c in r if c.endswith("__raw_bytes"))
+        pending.clear()
+
+    tables = iter(tables)
+    try:
+        while True:
+            ts = time.time()
+            tbl = next(tables, None)
+            if tbl is None:
+                break
+            tbl = flatten_table(tbl)
+            stages["read_sec"] += time.time() - ts
+            ts = time.time()
+            blocks = _order_and_slice(tbl, specs, sort_keys or [], block_rows, max_values)
+            stages["sort_sec"] += time.time() - ts
+            ts = time.time()
+            for block in blocks:
+                part_id = 0
+                if salt_cols:
+                    key = "\x1f".join(
+                        str(block.column(c)[0].as_py()) for c in salt_cols
+                    ).encode()
+                    part_id = int(zlib.crc32(key) % parts)
+                pending.append(
+                    encode_block(specs, block, part_id, (block_base << 24) | seq)
+                )
+                seq += 1
+                if len(pending) >= flush_blocks:
+                    stages["encode_sec"] += time.time() - ts
+                    flush()
+                    ts = time.time()
+            stages["encode_sec"] += time.time() - ts
+        if pending:
+            flush()
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return None
+    if fs is None:
+        os.replace(target, final)
+    stats = _with_file_bytes(fold_file_stats(pa.concat_tables(stat_chunks)), fs, final)
+    return {
+        "file": fname,
+        "n_blocks": seq,
+        "n_rows": n_rows,
+        "enc_bytes": int(enc_bytes),
+        "raw_bytes": int(raw_bytes),
+        "stages": {k: round(v, 4) for k, v in stages.items()},
+        "stats": stats,
+    }
+
+
+def _with_file_bytes(stats: dict, fs, path: str) -> dict:
+    """Add the file's byte size to its manifest entry: the stream reader's
+    maxBytesPerTrigger advice (a real column named ``__bytes`` wins).
+    Advice only — a failed stat never fails a commit."""
+    import os
+
+    if "__bytes" not in stats:
+        try:
+            stats["__bytes"] = (
+                os.path.getsize(path) if fs is None else int(fs.get_file_info(path).size)
+            )
+        except OSError:
+            pass
+    return stats
 
 
 def _fs_write_json(fs, path: str, obj) -> None:
@@ -431,14 +396,27 @@ def manifest_lock(fs, root: str):
 _SNAP_DIR = "_aisle_snapshots"
 
 
+def _committed_version(fs, root: str) -> int:
+    """Version of the committed ``_aisle_files.json`` (0 before the first
+    commit). Snapshots above it were written by a commit that crashed
+    before its manifest swap: they were never committed."""
+    try:
+        m = _fs_read_json(fs, f"{root.rstrip('/')}/_aisle_files.json")
+    except FileNotFoundError:
+        return 0
+    return int(m.get("version", 0))
+
+
 def list_snapshots(fs, root: str) -> list[int]:
-    """Committed manifest versions, ascending."""
+    """Committed manifest versions, ascending (an uncommitted snapshot
+    above the manifest's version is absent)."""
+    committed = _committed_version(fs, root)
     out = []
     for p, _sz in _fs_list(fs, f"{root.rstrip('/')}/{_SNAP_DIR}", ".json"):
         name = p.rsplit("/", 1)[-1]
         if name.startswith("v") and name[1:-5].isdigit():
             out.append(int(name[1:-5]))
-    return sorted(out)
+    return sorted(v for v in out if v <= committed)
 
 
 # every Nth snapshot is written FULL; the ones between are deltas against
@@ -484,20 +462,23 @@ def read_snapshot(fs, root: str, version: int) -> dict:
     return payload
 
 
-def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
-    """The bytes actually persisted for snapshot ``version``: the full
-    payload on the periodic checkpoints (and whenever the delta would not
-    be smaller — e.g. compaction rewrites the whole file set), otherwise
-    a delta against version-1 as read from the CURRENT manifest. Any
-    lineage surprise degrades to full — always correct, never smaller."""
+def _snapshot_payload(fs, root: str, payload: dict, prev: dict) -> dict:
+    """The bytes actually persisted for snapshot ``payload["version"]``:
+    the full payload on the periodic checkpoints (and whenever the delta
+    would not be smaller — e.g. compaction rewrites the whole file set),
+    otherwise a delta against the committed manifest ``prev`` (resolved
+    when in pointer form). Any lineage surprise degrades to full — always
+    correct, never smaller."""
     import json as _json
 
+    version = payload["version"]
     if version == 1 or version % _SNAP_FULL_EVERY == 1:
         return payload
-    try:
-        prev = load_manifest(fs, root)
-    except (FileNotFoundError, OSError):
-        return payload
+    if "files" not in prev:
+        try:
+            prev = read_snapshot(fs, root, version - 1)
+        except (FileNotFoundError, OSError):
+            return payload
     if prev.get("version") != version - 1:
         return payload
     old_files = set(prev.get("files", []))
@@ -549,21 +530,27 @@ def load_manifest(fs, root: str) -> dict:
 
 
 def publish_manifest(fs, root: str, payload: dict) -> int:
-    """The ONE manifest commit point: write an immutable numbered
-    snapshot (full or delta, see _snapshot_payload) — time travel for
-    training-data reproducibility (readers pin ``versionAsOf``; vacuum
-    keeps every file any retained snapshot references) — then commit by
-    swapping ``_aisle_files.json``: the full payload for small tables,
-    the pointer form past _MANIFEST_POINTER_MIN_FILES files so a
-    single-file append writes O(changed) bytes at ANY table size.
-    Callers hold ``manifest_lock`` where concurrent writers exist, which
-    also serializes version numbering. Returns the new version."""
+    """The manifest write: an immutable numbered snapshot (full or delta,
+    see _snapshot_payload) — time travel for training-data
+    reproducibility (readers pin ``versionAsOf``; vacuum keeps every file
+    any retained snapshot references) — then the commit itself, the swap
+    of ``_aisle_files.json``: the full payload for small tables, the
+    pointer form past _MANIFEST_POINTER_MIN_FILES files so a single-file
+    append writes O(changed) bytes at ANY table size. The new version is
+    the committed manifest's plus one, so a snapshot left by a commit
+    that crashed before its swap is overwritten by the next commit (and
+    readers never see it: ``list_snapshots``). Writers go through
+    ``commit_manifest``, which holds ``manifest_lock`` around this.
+    Returns the new version."""
     root = root.rstrip("/")
-    versions = list_snapshots(fs, root)
-    version = (versions[-1] + 1) if versions else 1
+    try:
+        cur = _fs_read_json(fs, f"{root}/_aisle_files.json")
+    except FileNotFoundError:
+        cur = {}
+    version = int(cur.get("version", 0)) + 1
     payload = dict(payload, version=version)
     _fs_mkdirs(fs, f"{root}/{_SNAP_DIR}")
-    snap = _snapshot_payload(fs, root, payload, version)
+    snap = _snapshot_payload(fs, root, payload, cur)
     _fs_write_json(fs, f"{root}/{_SNAP_DIR}/v{version:08d}.json", snap)
     if len(payload.get("files", ())) > _MANIFEST_POINTER_MIN_FILES:
         current = {"version": version, "pointer": True}
@@ -571,6 +558,82 @@ def publish_manifest(fs, root: str, payload: dict) -> int:
         current = payload
     _fs_write_json(fs, f"{root}/_aisle_files.json", current)
     return version
+
+
+def commit_manifest(
+    fs,
+    root: str,
+    add: dict[str, dict | None],
+    *,
+    retire=(),
+    replace: bool = False,
+    batch: int | None = None,
+    compacted_from: int | None = None,
+) -> int:
+    """The ONE manifest commit every writer goes through: a locked
+    read-merge-``publish_manifest``. ``add`` maps new data files
+    (relative to ``root``) to their per-file stats; None entries are
+    recomputed from the files' block stat columns
+    (``maintenance._recompute_file_stats``) before the lock is taken.
+
+    * ``replace`` — the new manifest lists exactly ``add`` (overwrite,
+      the direct-write rebuild, ``write_encoded``); otherwise the
+      committed manifest is merged: its files minus ``retire`` plus
+      ``add``, with their stats and extras (the streaming sink's
+      ``batches`` map) carried forward;
+    * ``batch`` — a stream micro-batch: ``add`` becomes that batch's file
+      list and the files it listed before are retired, so a replayed
+      batch replaces instead of duplicating;
+    * ``compacted_from`` — tags a compaction commit (stream readers emit
+      nothing for it: its files carry only already-emitted rows). The tag
+      is never carried forward to later commits.
+
+    Readers list the manifest, never the directory, so files outside it
+    (orphans of failed attempts, retired inputs) stay invisible. Returns
+    the new version."""
+    root = root.rstrip("/")
+    missing = [f for f, st in add.items() if st is None]
+    if missing:
+        from aisle_spark.maintenance import _recompute_file_stats
+
+        add = {**add, **_recompute_file_stats(fs, root, missing)}
+    with manifest_lock(fs, root):
+        try:
+            old = {} if replace else _fs_read_json(fs, f"{root}/_aisle_files.json")
+        except FileNotFoundError:  # first commit
+            old = {}
+        if old and "files" not in old:  # pointer form
+            old = read_snapshot(fs, root, int(old["version"]))
+        # extras ride forward (dropping the stream sink's "batches" map
+        # would let a replayed batch add duplicates) — except
+        # "compacted_from": stream readers skip commits tagged with it, so
+        # a tagged append would hide its files from streams forever
+        extras = {
+            k: v
+            for k, v in old.items()
+            if k not in ("files", "file_stats", "version", "pointer", "compacted_from")
+        }
+        retired = set(retire)
+        if batch is not None:
+            extras.setdefault("batches", {})
+            retired |= set(extras["batches"].get(str(batch), []))
+        if "batches" in extras:
+            # retired files leave every batch's list; a batch left with
+            # none drops out of the map
+            extras["batches"] = {
+                bid: kept
+                for bid, flist in extras["batches"].items()
+                if (kept := [f for f in flist if f not in retired])
+            }
+        if batch is not None:
+            extras["batches"][str(batch)] = sorted(add)
+        files = (set(old.get("files", [])) - retired) | set(add)
+        stats = {k: v for k, v in old.get("file_stats", {}).items() if k in files}
+        stats.update({f: st for f, st in add.items() if st})
+        payload = {**extras, "files": sorted(files), "file_stats": stats}
+        if compacted_from is not None:
+            payload["compacted_from"] = compacted_from
+        return publish_manifest(fs, root, payload)
 
 
 def _fs_read_json(fs, path: str):
@@ -629,21 +692,21 @@ def encode_files_direct(
     filesystem=None,
 ) -> list[str]:
     """The at-scale encode: python tasks read their input parquet with
-    pyarrow, encode blocks, and WRITE the block parquet themselves — only
-    tiny (file, n_blocks, n_rows) manifest rows ever cross the
+    pyarrow, encode blocks, and WRITE the block parquet themselves
+    (``write_block_file``) — only tiny commit rows ever cross the
     Python->JVM boundary. Returns the committed file names.
 
-    Why: the block-return path (``encode_files_inline`` -> Spark write)
-    moves every compressed payload Python->JVM->shuffle->writer; that
-    exchange was measured as the end-to-end scaling ceiling (BENCH_r01:
-    e2e efficiency 0.22-0.63 at 8->32 cores while the pure codec stack
-    scales at 0.93). Here the JVM only schedules tasks and collects file
-    names, so throughput scales with the python workers.
+    Why: returning the compressed payloads to Spark for its own write
+    moves every payload Python->JVM->shuffle->writer; that exchange was
+    measured as the end-to-end scaling ceiling (BENCH_r01: e2e efficiency
+    0.22-0.63 at 8->32 cores while the pure codec stack scales at 0.93).
+    Here the JVM only schedules tasks and collects file names, so
+    throughput scales with the python workers.
 
     Commit protocol (speculation/retry-safe): each attempt writes a
-    uniquely-named file via tmp-name + atomic rename, then a per-input
-    lineage sidecar under ``_done/`` (also atomic rename) recording the
-    data file plus codec/size/throughput metrics — the sidecar IS the
+    uniquely-named block file, then a per-input lineage sidecar under
+    ``_done/`` (atomic rename locally) recording the data file, its
+    per-file stats and codec/size/throughput metrics — the sidecar IS the
     per-input commit point. The driver's ``_aisle_files.json`` is rebuilt
     from the sidecars; readers list that manifest, never the directory,
     so orphans from failed attempts are invisible. On an object store the
@@ -652,11 +715,12 @@ def encode_files_direct(
 
     ``resume=True`` skips every input file that already has a committed
     sidecar — an interrupted run continues from the last committed input
-    (the north rule's "resumes from the last committed partition" for the
-    at-scale path; ``lineage_files`` exposes the metrics table).
-    ``part_id`` is still the salted crc32 of each block's first-row salt
+    (the north rule's "resumes from the last committed partition";
+    ``lineage_files`` exposes the per-input metrics table).
+    ``part_id`` is the salted crc32 of each block's first-row salt
     columns — the skew defense groups lineage/resume by it — while task
     input stays byte-balanced by Spark's input-split planning."""
+    import json as _json
     import os as _os
 
     fs = filesystem
@@ -670,23 +734,19 @@ def encode_files_direct(
         files = [f for f in files if _os.path.basename(f) not in committed_inputs]
         if not files:
             return _rebuild_manifest(out_path, in_schema, fs)
-    out_schema = blocks_arrow_schema(specs)
     sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
+    salt_cols_eff = salt_cols or _default_salt_cols(specs)
     # pyarrow reads the ORIGINAL top-level columns; structs flatten after
     names = [f.name for f in in_schema if not f.name.startswith("_")]
+    flush_blocks = FLUSH_BLOCKS  # the driver's value travels with the task
     _fs_mkdirs(fs, out_path)
 
     def encode_and_write(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_threads()
+        import hashlib
         import os
         import time
         import uuid
-        import zlib
 
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -695,124 +755,46 @@ def encode_files_direct(
         task_id = tc.partitionId() if tc else 0
         attempt = tc.taskAttemptId() if tc else 0
         t0 = time.time()
-        inputs: list[str] = []
-        seq = 0
-        fname = f"blocks-{task_id:05d}-{attempt}-{uuid.uuid4().hex[:8]}.parquet"
-        # local: tmp + atomic rename; object store: write the uniquely
-        # named final object directly — visibility is governed solely by
-        # the sidecar manifest, so no rename primitive is needed
-        tmp = (
-            os.path.join(out_path, f".{fname}.tmp")
-            if fs is None
-            else f"{out_path.rstrip('/')}/{fname}"
+        paths = [
+            p for b in batches for blob in b.column(0).to_pylist()
+            for p in _json.loads(blob)
+        ]
+        meta = write_block_file(
+            (pq.read_table(p, columns=names, filesystem=fs) for p in paths),
+            specs,
+            out_path,
+            f"blocks-{task_id:05d}-{attempt}-{uuid.uuid4().hex[:8]}.parquet",
+            compression=compression,
+            flush_blocks=flush_blocks,
+            block_base=task_id,
+            sort_keys=sort_keys,
+            block_rows=block_rows,
+            max_values=max_values,
+            parts=parts,
+            salt_cols=salt_cols_eff,
+            fs=fs,
         )
-        writer = None
-        n_blocks = total_rows = enc_bytes = raw_bytes = 0
-        pending: list[dict] = []
-        # per-stage wall (read/sort/encode/write) recorded in the commit
-        # sidecar: the scaling gate's per-stage table aggregates these
-        stages = {"read_sec": 0.0, "sort_sec": 0.0, "encode_sec": 0.0, "write_sec": 0.0}
-
-        def flush() -> None:
-            # stream pending blocks out as one parquet row group: peak
-            # task memory is FLUSH_BLOCKS blocks, independent of input
-            # file size (VERDICT r2 — the accumulate-then-from_pylist
-            # variant held every block of every assigned input in RAM)
-            nonlocal writer, n_blocks, total_rows, enc_bytes, raw_bytes
-            if not pending:
-                return
-            ts = time.time()
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, out_schema, compression=compression, filesystem=fs
-                )
-            writer.write_table(
-                pa.Table.from_pylist(pending, schema=out_schema),
-                row_group_size=FLUSH_BLOCKS,
-            )
-            stages["write_sec"] += time.time() - ts
-            n_blocks += len(pending)
-            total_rows += int(sum(r["n_rows"] for r in pending))
-            enc_bytes += int(
-                sum(r[c] for r in pending for c in r if c.endswith("__enc_bytes"))
-            )
-            raw_bytes += int(
-                sum(r[c] for r in pending for c in r if c.endswith("__raw_bytes"))
-            )
-            pending.clear()
-
-        import json as _json
-
-        for b in batches:
-            for blob in b.column(0).to_pylist():
-                for path in _json.loads(blob):
-                    inputs.append(os.path.basename(path))
-                    ts = time.time()
-                    tbl = flatten_table(
-                        pq.read_table(path, columns=names, filesystem=fs)
-                    )
-                    stages["read_sec"] += time.time() - ts
-                    ts = time.time()
-                    # single-gather ordering: sort + block bounds + width
-                    # clustering resolved on indices, ONE take
-                    blocks_list = _order_and_slice(
-                        tbl, specs, sort_keys, block_rows, max_values
-                    )
-                    stages["sort_sec"] += time.time() - ts
-                    ts = time.time()
-                    for block in blocks_list:
-                        first = {
-                            c: block.column(c)[0].as_py() for c in salt_cols_eff
-                        }
-                        key = "\x1f".join(
-                            str(first[c]) for c in salt_cols_eff
-                        ).encode()
-                        pending.append(
-                            encode_block(
-                                specs,
-                                block,
-                                int(zlib.crc32(key) % parts),
-                                (task_id << 24) | seq,
-                            )
-                        )
-                        seq += 1
-                        if len(pending) >= FLUSH_BLOCKS:
-                            stages["encode_sec"] += time.time() - ts
-                            flush()
-                            ts = time.time()
-                    stages["encode_sec"] += time.time() - ts
-        flush()
-        if writer is None:
+        if meta is None:
             return
-        writer.close()
-        if fs is None:
-            os.replace(tmp, os.path.join(out_path, fname))
         # the per-input COMMIT: data file is in place, now the sidecar.
         # keyed by input names, so a retried/resumed task for the same
         # inputs REPLACES this entry (and its orphan data file is never
         # listed by the manifest rebuild)
+        inputs = [os.path.basename(p) for p in paths]
         wall = time.time() - t0
-        meta = {
-            "inputs": inputs,
-            "file": fname,
-            "n_blocks": n_blocks,
-            "n_rows": total_rows,
-            "enc_bytes": enc_bytes,
-            "raw_bytes": raw_bytes,
-            "wall_sec": round(wall, 4),
-            "rows_per_sec": round(total_rows / wall, 1) if wall > 0 else 0.0,
-            "stages": {k: round(v, 4) for k, v in stages.items()},
-        }
+        meta.update(
+            inputs=inputs,
+            wall_sec=round(wall, 4),
+            rows_per_sec=round(meta["n_rows"] / wall, 1) if wall > 0 else 0.0,
+        )
         # collision-resistant sidecar key (ADVICE r2 medium): a 32-bit
         # crc32 over ~1e5 input sets has tens-of-percent birthday collision
         # odds, and a collision silently drops one input's blocks from the
         # rebuilt manifest
-        import hashlib
-
         skey = hashlib.sha256("|".join(sorted(inputs)).encode()).hexdigest()[:24]
-        _fs_write_json(fs, f"{out_path.rstrip('/')}/_done/{skey}.json", meta)
+        _fs_write_json(fs, f"{done_dir}/{skey}.json", meta)
         yield pa.RecordBatch.from_pylist(
-            [{"file": fname, "n_blocks": n_blocks, "n_rows": total_rows}],
+            [{"file": meta["file"], "n_blocks": meta["n_blocks"], "n_rows": meta["n_rows"]}],
             schema=pa.schema(
                 [
                     pa.field("file", pa.string()),
@@ -861,8 +843,6 @@ def encode_files_direct(
         )
         if g
     ]
-    import json as _json
-
     fdf = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(_json.dumps(g),) for g in groups], len(groups)
@@ -877,45 +857,36 @@ def encode_files_direct(
 
 def _rebuild_manifest(out_path: str, in_schema: pa.Schema, fs=None) -> list[str]:
     """Manifest = exactly the data files named by committed ``_done/``
-    sidecars (this run's AND previous runs', so resume unions correctly).
-    On an object store the manifest PUT is the only commit primitive —
-    no rename anywhere on the fs path."""
-    committed = sorted(
-        _fs_read_json(fs, p)["file"]
+    sidecars (this run's AND previous runs', so resume unions correctly),
+    with the per-file stats each task folded into its sidecar (a sidecar
+    written before sidecars carried stats gets them recomputed from its
+    file). On an object store the manifest PUT is the only commit
+    primitive — no rename anywhere on the fs path."""
+    sidecars = [
+        _fs_read_json(fs, p)
         for p, _sz in _fs_list(fs, f"{out_path.rstrip('/')}/_done", ".json")
+    ]
+    commit_manifest(
+        fs, out_path, {m["file"]: m.get("stats") for m in sidecars}, replace=True
     )
-    manifest: dict = {"files": committed}
-    if committed:
-        # per-file [min,max] bounds: the manifest-list pruning tier the
-        # data source plans with (datasource.file_keep). One projected
-        # DuckDB aggregate over the stat columns, once per JOB (not per
-        # input commit) — at 10^5 files this is the same footer-sized
-        # metadata pass the planning side performs
-        from aisle_spark.maintenance import _recompute_file_stats
-
-        manifest["file_stats"] = _recompute_file_stats(
-            fs, out_path.rstrip("/"), committed
-        )
-    with manifest_lock(fs, out_path):
-        publish_manifest(fs, out_path, manifest)
     # sidecar records the ORIGINAL (possibly nested) schema — scan derives
     # the flat leaf specs from it
     in_arrow = pa.schema([f for f in in_schema if not f.name.startswith("_")])
     _write_schema_sidecar(out_path, in_arrow, fs)
-    return committed
+    return sorted(m["file"] for m in sidecars)
 
 
 def lineage_files(spark: SparkSession, out_path: str) -> DataFrame:
     """Per-input lineage + metrics of a direct-write encode as a DataFrame
-    (inputs, data file, blocks/rows/bytes, wall, throughput)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
+    (inputs, data file, blocks/rows/bytes, wall, throughput, per-stage
+    seconds). ``out_path`` may be a pyarrow.fs URI (``file://``, ...)."""
+    from aisle_spark.datasource import _fs_of
 
-    rows = []
-    for p in sorted(_glob.glob(_os.path.join(out_path, "_done", "*.json"))):
-        with open(p) as fh:
-            rows.append(_json.load(fh))
+    fs, root = _fs_of(out_path)
+    rows = [
+        _fs_read_json(fs, p)
+        for p, _sz in _fs_list(fs, f"{root.rstrip('/')}/_done", ".json")
+    ]
     return spark.createDataFrame(
         [
             (
@@ -1863,27 +1834,8 @@ def write_encoded(blocks: DataFrame, path: str, schema: pa.Schema, mode: str = "
     _write_schema_sidecar(path, schema)
     # commit a manifest with per-file [min,max] bounds so the data source
     # gets the manifest-list pruning tier over this layout too
-    import glob as _glob
-    import os as _os
-
-    files = sorted(
-        _os.path.basename(p)
-        for p in _glob.glob(_os.path.join(path, "*.parquet"))
-        if not _os.path.basename(p).startswith(("_", "."))
-    )
-    from aisle_spark.maintenance import _recompute_file_stats
-
-    with manifest_lock(None, path):
-        publish_manifest(
-            None,
-            path,
-            {
-                "files": files,
-                "file_stats": _recompute_file_stats(None, path.rstrip("/"), files)
-                if files
-                else {},
-            },
-        )
+    files = [p.rsplit("/", 1)[-1] for p, _sz in _fs_list(None, path, ".parquet")]
+    commit_manifest(None, path, dict.fromkeys(files), replace=True)
 
 
 def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
@@ -1899,7 +1851,6 @@ def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
 
 
 def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
-    import json
     import os
 
     with open(os.path.join(path, "_aisle_schema.arrow"), "rb") as fh:

@@ -1,18 +1,19 @@
-"""Structured Streaming ingestion for the engine: a micro-batch sink that
-encodes each batch with the narrow inline path and commits its block files
-into an encoded table directory with exactly-once semantics.
+"""Structured Streaming ingestion for the engine: a micro-batch sink whose
+tasks write block files straight into an encoded table directory and
+whose driver commits them with exactly-once semantics.
 
 Shape:  readStream (any source) -> encode_stream(...) -> encoded table
         readable by read_encoded()/scan() WHILE the stream keeps appending.
 
 Exactly-once protocol (the streaming face of the batch direct-write
-commit): every micro-batch writes its blocks under a batch-keyed staging
-directory, promotes them into the table root under batch-keyed file names,
-and rewrites the committed-file manifest (``_aisle_files.json``) via
-tmp+atomic-rename. A replayed batch (failure before the manifest rename)
-overwrites the SAME file names and manifest entry, so duplicates are
-impossible — the same idempotency argument as the resumable batch encode
-(checkpoint.py), keyed by Spark's monotonically increasing batchId.
+commit): every micro-batch runs one ``mapInArrow`` whose tasks write
+uniquely named block files (``pipeline.write_block_file``) and return
+their commit rows; the driver then records the batch's files in the
+committed-file manifest (``_aisle_files.json``) through
+``pipeline.commit_manifest`` keyed by Spark's monotonically increasing
+batchId. A replayed batch (failure before the manifest commit) REPLACES
+that batch's file list, so duplicates are impossible; files of an earlier
+attempt are never listed and stay invisible.
 
 This mirrors the reference's "streaming extensibility" surface
 (SURVEY.md §2.9) re-expressed on Spark's own streaming engine: watermarks,
@@ -24,25 +25,27 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from aisle_spark.pipeline import (
     DEFAULT_BLOCK_ROWS,
     DEFAULT_MAX_VALUES,
+    FLUSH_BLOCKS,
+    _default_salt_cols,
+    _pin_worker_threads,
     _write_schema_sidecar,
     arrow_schema_of,
-    encode_table_inline,
+    commit_manifest,
+    write_block_file,
 )
-
-
-def _manifest_path(out_path: str) -> str:
-    return os.path.join(out_path, "_aisle_files.json")
+from aisle_spark.schema import specs_for_schema
 
 
 def _read_manifest(out_path: str) -> dict:
-    p = _manifest_path(out_path)
-    if not os.path.exists(p):
+    if not os.path.exists(os.path.join(out_path, "_aisle_files.json")):
         return {"files": [], "batches": {}}
     from aisle_spark.pipeline import load_manifest
 
@@ -51,47 +54,58 @@ def _read_manifest(out_path: str) -> dict:
     return m
 
 
-def _commit_batch(out_path: str, batch_id: int, files: list[str]) -> None:
-    """Atomically record this batch's files; replays replace, never add.
-    Each commit also records the files' [min,max] bounds so streamed
-    tables participate in the manifest-list pruning tier
-    (datasource.file_keep) like batch-written ones."""
-    from aisle_spark.pipeline import manifest_lock
+def _encode_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    out_path: str,
+    parts: int = 64,
+    salt_cols: list[str] | None = None,
+    sort_cols: list[str] | None = None,
+    block_rows: int = DEFAULT_BLOCK_ROWS,
+    max_values: int = DEFAULT_MAX_VALUES,
+) -> int:
+    """One micro-batch: each input split is sorted, encoded and written
+    as one block file by its task; the driver commits the batch's files
+    (replacing any earlier attempt's). Returns the committed version."""
+    specs = specs_for_schema(arrow_schema_of(batch_df))
+    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
+    salt_cols_eff = salt_cols or _default_salt_cols(specs)
+    flush_blocks = FLUSH_BLOCKS  # the driver's value travels with the task
 
-    with manifest_lock(None, out_path):
-        _commit_batch_locked(out_path, batch_id, files)
+    def encode_split(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _pin_worker_threads()
+        import uuid
 
+        from pyspark import TaskContext
 
-def _commit_batch_locked(out_path: str, batch_id: int, files: list[str]) -> None:
-    m = _read_manifest(out_path)
-    replaced = set(m["batches"].get(str(batch_id), []))
-    m["batches"][str(batch_id)] = files
-    # files = non-batch files (compaction retires the batches map but its
-    # output files must survive subsequent batch commits — ADVICE r3 high)
-    # ∪ every live batch's files; a replayed batch replaces, never adds
-    batch_files = {f for fs in m["batches"].values() for f in fs}
-    m["files"] = sorted(
-        (set(m.get("files", [])) - replaced) | set(files) | batch_files
+        got = list(batches)
+        if not got:
+            return
+        tc = TaskContext.get()
+        task_id = tc.partitionId() if tc else 0
+        meta = write_block_file(
+            [pa.Table.from_batches(got)],
+            specs,
+            out_path,
+            f"stream-b{batch_id:08d}-{task_id:05d}-{uuid.uuid4().hex[:8]}.parquet",
+            compression="none",
+            flush_blocks=flush_blocks,
+            block_base=task_id,
+            sort_keys=sort_keys,
+            block_rows=block_rows,
+            max_values=max_values,
+            parts=parts,
+            salt_cols=salt_cols_eff,
+        )
+        if meta is not None:  # the file and its manifest entry, as JSON
+            yield pa.RecordBatch.from_pylist(
+                [{"file": meta["file"], "stats": json.dumps(meta["stats"])}]
+            )
+
+    rows = batch_df.mapInArrow(encode_split, "file string, stats string").collect()
+    return commit_manifest(
+        None, out_path, {r.file: json.loads(r.stats) for r in rows}, batch=batch_id
     )
-    stats = {
-        k: v
-        for k, v in m.get("file_stats", {}).items()
-        if k in set(m["files"]) - replaced
-    }
-    if files:
-        from aisle_spark.maintenance import _recompute_file_stats
-
-        stats.update(_recompute_file_stats(None, out_path.rstrip("/"), files))
-    m["file_stats"] = stats
-    # a compaction commit leaves "compacted_from" in the current
-    # manifest; republishing it here would tag THIS batch's snapshot as
-    # a compaction commit too, and stream readers skip those
-    # (_additions returns []) — every post-OPTIMIZE batch would be
-    # silently invisible downstream
-    m.pop("compacted_from", None)
-    from aisle_spark.pipeline import publish_manifest
-
-    publish_manifest(None, out_path, m)
 
 
 def encode_stream(
@@ -108,34 +122,13 @@ def encode_stream(
     """Attach the encoder to a streaming DataFrame; returns the started
     StreamingQuery. The caller controls triggers/await on the handle."""
     os.makedirs(out_path, exist_ok=True)
-    schema = arrow_schema_of(stream_df)
-    _write_schema_sidecar(out_path, schema)
+    _write_schema_sidecar(out_path, arrow_schema_of(stream_df))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import glob
-        import shutil
-
-        blocks = encode_table_inline(
-            batch_df,
-            parts=parts,
-            salt_cols=salt_cols,
-            sort_cols=sort_cols,
-            block_rows=block_rows,
-            max_values=max_values,
-            redistribute=False,  # micro-batches are small; no reshuffle
+        _encode_batch(
+            batch_df, batch_id, out_path, parts, salt_cols, sort_cols,
+            block_rows, max_values,
         )
-        staging = os.path.join(out_path, f".staging-batch-{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        blocks.write.mode("overwrite").option("compression", "none").parquet(staging)
-        names = []
-        for k, src in enumerate(
-            sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-        ):
-            name = f"stream-b{batch_id:08d}-{k:04d}.parquet"
-            os.replace(src, os.path.join(out_path, name))  # replay-safe
-            names.append(name)
-        shutil.rmtree(staging, ignore_errors=True)
-        _commit_batch(out_path, batch_id, names)
 
     return (
         stream_df.writeStream.foreachBatch(sink)

@@ -25,7 +25,7 @@ def encoded(spark, tmp_path_factory):
     df = spark.createDataFrame(pa.Table.from_batches([synth_batch(13, 4000)]))
     df.write.mode("overwrite").parquet(src)
     main([
-        "encode", "--input", src, "--output", out, "--direct",
+        "encode", "--input", src, "--output", out,
         "--parts", "2", "--sort", "source,n_tok",
     ])
     return df, out, base

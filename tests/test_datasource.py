@@ -1075,12 +1075,19 @@ class TestFileKeepDomains:
     def test_nan_bound_poisons_merge(self):
         import math
 
-        from aisle_spark.datasource import _merge_file_stat, file_keep
+        from aisle_spark.datasource import file_keep, fold_file_stats
         from aisle_spark.filterspec import col
 
-        acc: dict = {}
-        _merge_file_stat(acc, {"x__min": 1.0, "x__max": 5.0}, ["x"])
-        _merge_file_stat(acc, {"x__min": 2.0, "x__max": math.nan}, ["x"])
+        acc = fold_file_stats(
+            pa.table(
+                {
+                    "n_rows": [4, 4],
+                    "x__min": [1.0, 2.0],
+                    "x__max": [5.0, math.nan],
+                    "x__nulls": [0, 0],
+                }
+            )
+        )
         assert acc["x"][:2] == [1.0, None]  # NaN block => max side Unknown
         # a NaN-bearing file must stay for x > v under Spark's NaN-greatest order
         assert file_keep({"x": [1.0, None]}, col("x") > 100.0)

@@ -205,3 +205,36 @@ def test_task_layout_waves(spark, dirs, monkeypatch):
     got2 = scan(blocks2, schema2).agg(F.count("*"), F.sum("n_tok")).collect()[0]
     ref2 = spark.read.parquet(src2).agg(F.count("*"), F.sum("n_tok")).collect()[0]
     assert tuple(got2) == tuple(ref2)
+
+
+def test_lineage_files_through_uri(spark, dirs):
+    """lineage_files reads the sidecars through pyarrow.fs for URI paths,
+    as the writer does for a table written with ``filesystem=``."""
+    from pyarrow import fs as pafs
+
+    src, out = dirs
+    _drop(src, "f0.parquet", 0, 2000)
+    encode_files_direct(
+        spark, src, out, parts=4, block_rows=512, filesystem=pafs.LocalFileSystem()
+    )
+    rows = lineage_files(spark, "file://" + out).collect()
+    assert [r.inputs for r in rows] == [["f0.parquet"]]
+    assert rows[0].n_rows == 2000 and rows[0].n_blocks >= 4
+
+
+def test_resume_recomputes_stats_of_sidecars_without_them(spark, dirs):
+    """Sidecars written before they carried per-file stats: the manifest
+    rebuild recomputes those files' stats from their block stat columns,
+    equal to what the task folded."""
+    src, out = dirs
+    _drop(src, "f0.parquet", 0, 2000)
+    _drop(src, "f1.parquet", 2000, 2000)
+    encode_files_direct(spark, src, out, parts=4, sort_cols=["source", "n_tok"])
+    want = json.load(open(os.path.join(out, "_aisle_files.json")))["file_stats"]
+    for p in glob.glob(os.path.join(out, "_done/*.json")):
+        meta = json.load(open(p))
+        del meta["stats"]
+        json.dump(meta, open(p, "w"))
+    encode_files_direct(spark, src, out, parts=4, resume=True)
+    got = json.load(open(os.path.join(out, "_aisle_files.json")))["file_stats"]
+    assert got == want and len(got) == 2

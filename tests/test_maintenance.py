@@ -214,6 +214,59 @@ class TestTimeTravel:
         assert spark.read.format("aisle").load(out).count() == df.count()
 
 
+    def test_crash_before_manifest_swap_leaves_no_visible_version(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit that wrote snapshot v3 and then crashed before the
+        ``_aisle_files.json`` swap committed nothing: versionAsOf, stream
+        offsets and snapshots() must not see v3, and the next commit
+        takes v3 over."""
+        import shutil
+
+        import aisle_spark.pipeline as pl
+        from aisle_spark.datasource import AisleStreamReader, _manifest_of
+        from aisle_spark.maintenance import snapshots
+
+        register(spark)
+        out = str(tmp_path / "crash")
+        df = spark.createDataFrame(pa.Table.from_batches([synth_batch(53, 600)]))
+        df.limit(200).write.format("aisle").mode("append").save(out)  # v1
+        df.limit(300).write.format("aisle").mode("append").save(out)  # v2
+        src = _manifest(out)["files"][0]
+        for name in ("orphan.parquet", "next.parquet"):
+            shutil.copy(os.path.join(out, src), os.path.join(out, name))
+
+        real = pl._fs_write_json
+
+        def crash_on_swap(fs, path, obj):
+            if path.endswith("/_aisle_files.json"):
+                raise OSError("injected crash before the manifest swap")
+            real(fs, path, obj)
+
+        monkeypatch.setattr(pl, "_fs_write_json", crash_on_swap)
+        with pytest.raises(OSError, match="injected crash"):
+            pl.commit_manifest(None, out, {"orphan.parquet": None})
+        monkeypatch.undo()
+        assert os.path.exists(os.path.join(out, pl._SNAP_DIR, "v00000003.json"))
+        assert _manifest(out)["version"] == 2
+        assert pl.list_snapshots(None, out) == [1, 2]
+        assert [s["version"] for s in snapshots(out)] == [1, 2]
+        assert AisleStreamReader(out).latestOffset() == {"version": 2}
+        with pytest.raises(FileNotFoundError):
+            _manifest_of(None, out, 3)
+        with pytest.raises(Exception):
+            spark.read.format("aisle").option("versionAsOf", "3").load(out).count()
+        assert spark.read.format("aisle").load(out).count() == 500
+
+        # the next commit numbers from the committed manifest: it takes v3
+        # over, and the crashed commit's file never becomes visible
+        assert pl.commit_manifest(None, out, {"next.parquet": None}) == 3
+        snap = pl.read_snapshot(None, out, 3)
+        assert "next.parquet" in snap["files"]
+        assert "orphan.parquet" not in snap["files"]
+        assert pl.list_snapshots(None, out) == [1, 2, 3]
+
+
 class TestDeltaSnapshots:
     """Snapshot growth discipline (VERDICT r3 next #7): commits persist
     O(changed files) snapshot bytes, not O(table files); every chain
@@ -431,7 +484,7 @@ class TestIncrementalCompaction:
         replace, never duplicate)."""
         import json as _json
 
-        from aisle_spark.streaming import _commit_batch
+        from aisle_spark.pipeline import commit_manifest
 
         register(spark)
         out = str(tmp_path / "st")
@@ -446,8 +499,8 @@ class TestIncrementalCompaction:
             ).write.format("aisle").mode("append").save(out)
         m = _manifest(out)
         f0, f1 = sorted(m["files"])[:2]
-        _commit_batch(out, 0, [f0])
-        _commit_batch(out, 1, [f1])
+        commit_manifest(None, out, {f0: None}, batch=0)
+        commit_manifest(None, out, {f1: None}, batch=1)
         sizes = {f: os.path.getsize(os.path.join(out, f)) for f in (f0, f1)}
         small = min(sizes, key=sizes.get)
         keep = f1 if small == f0 else f0
@@ -455,7 +508,7 @@ class TestIncrementalCompaction:
         # so append one more tiny file into the small batch
         df.limit(20).repartition(1).write.format("aisle").mode("append").save(out)
         extra = sorted(set(_manifest(out)["files"]) - {f0, f1})[0]
-        _commit_batch(out, 2, [extra])
+        commit_manifest(None, out, {extra: None}, batch=2)
         cutoff = (sizes[keep] - 1) / (1024 * 1024)
         s = compact_encoded(spark, out, target_files=1, min_file_mb=cutoff)
         assert not s.get("skipped")
@@ -484,7 +537,7 @@ class TestReviewRegressions:
         from pyspark.sql import functions as F
 
         from aisle_spark.datasource import AisleStreamReader
-        from aisle_spark.streaming import _commit_batch
+        from aisle_spark.pipeline import commit_manifest
 
         register(spark)
         out = str(tmp_path / "pc")
@@ -495,7 +548,8 @@ class TestReviewRegressions:
             ).write.format("aisle").mode("append").save(out)
         compact_encoded(spark, out, target_files=1)
         # the next BATCH COMMIT adds a brand-new file (the real sink
-        # flow: addBatch writes the file, _commit_batch publishes it)
+        # flow: the batch's tasks write the file, commit_manifest
+        # publishes it)
         import shutil as _sh
 
         src_f = next(
@@ -503,7 +557,7 @@ class TestReviewRegressions:
         )
         newf = "part-postoptimize.parquet"
         _sh.copy(os.path.join(out, src_f), os.path.join(out, newf))
-        _commit_batch(out, 0, [newf])
+        commit_manifest(None, out, {newf: None}, batch=0)
         from aisle_spark.pipeline import _SNAP_DIR, list_snapshots
 
         latest = list_snapshots(None, out)[-1]

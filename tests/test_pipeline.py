@@ -193,15 +193,20 @@ class TestEndToEnd:
 
 
 class TestInlineEncode:
-    """encode_table_inline: narrow encode + compressed-block shuffle."""
+    """The narrow encode (encode_files_direct): python tasks encode their
+    input files and write the block files themselves, no row shuffle."""
 
-    def test_inline_roundtrip_and_prune(self, spark):
+    def test_inline_roundtrip_and_prune(self, spark, tmp_path):
         df = spark.createDataFrame(pa.Table.from_batches([synth_batch(0, 3000)]))
-        from aisle_spark.pipeline import encode_table_inline
+        from aisle_spark.pipeline import encode_files_direct
 
-        blocks = encode_table_inline(
-            df, parts=8, sort_cols=["source", "n_tok"], block_rows=256
-        ).cache()
+        src, out = str(tmp_path / "src"), str(tmp_path / "enc")
+        df.repartition(3).write.parquet(src)
+        encode_files_direct(
+            spark, src, out, parts=8, sort_cols=["source", "n_tok"], block_rows=256
+        )
+        blocks, _schema = read_encoded(spark, out)
+        blocks = blocks.cache()
         out = scan(blocks, TOKEN_SCHEMA).orderBy("doc_id").toPandas()
         exp = df.orderBy("doc_id").toPandas()
         assert out["doc_id"].tolist() == exp["doc_id"].tolist()

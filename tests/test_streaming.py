@@ -3,9 +3,7 @@ file-manifest commit, readable by scan() between batches."""
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -99,18 +97,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
     blocks, schema = read_encoded(spark, out)
     n_before = scan(blocks, schema).count()
     # write the same batch again under the same id
-    from aisle_spark.pipeline import encode_table_inline
-
-    bl = encode_table_inline(batch_df, parts=2, block_rows=512, redistribute=False)
-    staging = os.path.join(out, ".staging-batch-0")
-    bl.write.mode("overwrite").option("compression", "none").parquet(staging)
-    names = []
-    for k, srcf in enumerate(sorted(glob.glob(os.path.join(staging, "part-*.parquet")))):
-        name = f"stream-b{0:08d}-{k:04d}.parquet"
-        os.replace(srcf, os.path.join(out, name))
-        names.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    S._commit_batch(out, 0, names)
+    S._encode_batch(batch_df, 0, out, parts=2, block_rows=512)
     blocks, schema = read_encoded(spark, out)
     assert scan(blocks, schema).count() == n_before  # replaced, not appended
 
