@@ -639,12 +639,12 @@ def _ds_typed_file_prune_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.format("aisle")
         .option(
-            # INTEGER price literal: sqlcompile parses 60000.00 as a
-            # Python float and file_keep's float-vs-decimal branch is
-            # deliberately no-evidence (double-cast boundary rounding) —
-            # an int literal coerces exactly into the decimal stat
-            # domain, so this gate genuinely exercises the decimal
-            # manifest-list tier (code-review r5 finding)
+            # INTEGER price literal: an int coerces exactly into the
+            # decimal stat domain at every prune tier. (sqlcompile parses
+            # 60000.00 as a Python float; that one prunes too, since an
+            # on-grid float whose half-ulp is below the column's grid step
+            # is exact evidence — chunkstats._float_on_decimal_grid — but
+            # this gate keeps the int form it was written with.)
             "where",
             "l_price >= 60000 AND delay >= INTERVAL 30000 SECONDS",
         )

@@ -2,12 +2,16 @@
 page index that aisle's second pruning granularity consumes
 (/root/reference/src/prune/page.rs:71-137, src/prune/cmp.rs:216-270,
 src/prune/eval.rs:66-176) — and the one numpy tri-state evaluator that
-both the block and the chunk tier run.
+all three prune tiers (file, block, chunk) run.
 
 Each 4096-row block stores, per scalar column, min/max/null-count arrays
 over fixed ROW_CHUNK-row chunks. ``unit_tri`` evaluates a predicate's
 Kleene tri-state vectorized over per-unit stat arrays, whatever the
 unit is:
+  * files — ``datasource.file_keep`` runs it over one unit per file,
+    built from the manifest's per-file ``[min, max, nulls, rows]`` and
+    map key-set entries, so a file drops exactly when the same evidence
+    rules say none of its rows can match;
   * blocks — the DataSource planner (``AisleReader.partitions``) runs it
     once over the concatenated manifest stat columns of the files the
     file tier kept, selecting exactly the block set Catalyst's
@@ -156,16 +160,21 @@ def _lit_num(v, kind: str, arrow_type: pa.DataType | None = None):
     against date32 stats stored in DAYS, turns Unknown into a wrong
     definitely-false and silently drops matching rows. A float literal on
     an int column stays a float: the comparison then runs in float64,
-    exactly as Catalyst's cast does."""
+    exactly as Catalyst's cast does. A Decimal literal compares exactly
+    (Spark widens both sides to a common decimal): one finer than the
+    column's grid stays a Decimal, which numpy compares exactly against
+    the integer stats."""
     import decimal as _decimal
 
+    if isinstance(v, _decimal.Decimal) and not v.is_finite():
+        return None
     if kind == "decimal":
+        if isinstance(v, float):
+            return _float_on_decimal_grid(v, arrow_type.scale)
         if isinstance(v, bool) or not isinstance(v, (int, _decimal.Decimal)):
             return None
         unscaled = _decimal.Decimal(v).scaleb(arrow_type.scale)
-        if unscaled != int(unscaled):  # more precision than the column
-            return None
-        return int(unscaled)
+        return int(unscaled) if unscaled == int(unscaled) else unscaled
     if kind == "float":
         if isinstance(v, bool) or not isinstance(v, (int, float)):
             return None
@@ -190,7 +199,27 @@ def _lit_num(v, kind: str, arrow_type: pa.DataType | None = None):
             return (v - _EPOCH_DATE).days
         if isinstance(v, (int, float)):  # bools included
             return v
+        if isinstance(v, _decimal.Decimal):
+            return int(v) if v == int(v) else v
     return None
+
+
+def _float_on_decimal_grid(v: float, scale: int):
+    """Unscaled value of a float literal against a decimal(p, ``scale``)
+    column, or None. Spark casts the DECIMAL side to double, so
+    boundary strictness can flip within half an ulp of the literal. The
+    exact comparison agrees with the double one when (a) the literal
+    sits ON the column's 10^-scale grid (Decimal(v) is the exact binary
+    value) and (b) half an ulp at |v| is smaller than the grid step:
+    then no decimal value other than v itself can round across v. The
+    ``price >= 60000.00`` money shape prunes; off-grid doubles (0.1)
+    and huge magnitudes stay Unknown."""
+    import decimal as _decimal
+
+    if not math.isfinite(v) or not (v == 0.0 or math.ulp(abs(v)) < 10.0 ** -scale):
+        return None
+    unscaled = _decimal.Decimal(v).scaleb(scale)
+    return int(unscaled) if unscaled == int(unscaled) else None
 
 
 _STAT_SUFFIXES = (
@@ -329,8 +358,10 @@ def _lit(so, v):
     """``v`` in the stat domain of the scalar column ``so``, or None."""
     if so is None:
         return None
-    if so.kind in ("string", "binary"):
-        return v if isinstance(v, str if so.kind == "string" else bytes) else None
+    if so.kind == "string":
+        return v if isinstance(v, str) else None
+    if so.kind == "binary":  # Spark hands pushed binary values over as bytearray
+        return bytes(v) if isinstance(v, (bytes, bytearray, memoryview)) else None
     return _lit_num(v, so.kind, so.arrow_type)
 
 
@@ -401,8 +432,6 @@ def _map_key_f(stats, so, spec, n: int) -> np.ndarray:
         v = spec.value if isinstance(spec.value, str) else None
     else:
         v = _lit_num(spec.value, vk)
-    if v is None:
-        return np.zeros(n, dtype=bool)
     keys = stats.get(f"{spec.col}__keys")
     flat, starts, lens, ok = _lists(keys, n)
     pos = np.full(n, -1, dtype=np.int64)
@@ -412,10 +441,14 @@ def _map_key_f(stats, so, spec, n: int) -> np.ndarray:
         )
         units = np.repeat(np.arange(n), lens)[hit]
         pos[units] = hit - starts[units]
+    # a key absent from a known key set occurs in NO row: all rows NULL,
+    # whatever the literal
+    absent = ok & (pos < 0)
+    if v is None:
+        return absent
     lo = _map_value(stats.get(f"{spec.col}__kmin"), pos, n)
     hi = _map_value(stats.get(f"{spec.col}__kmax"), pos, n)
-    # a key absent from a known key set occurs in NO row: all rows NULL
-    return (ok & (pos < 0)) | _range(spec.op, lo, hi, v)[1]
+    return absent | _range(spec.op, lo, hi, v)[1]
 
 
 def unit_tri(spec, stats, kinds, n_rows: np.ndarray, opts=None) -> tuple:
@@ -470,9 +503,9 @@ def unit_tri(spec, stats, kinds, n_rows: np.ndarray, opts=None) -> tuple:
         t, f = reduce(np.logical_or, ts) | empty, reduce(np.logical_and, fs_) | empty
         if op == "eq" and None not in lits and so.kind in ("string", "binary"):
             if opts.use_dict:
-                f = f | _absent(stats.get(f"{spec.col}__dict"), values, n)
+                f = f | _absent(stats.get(f"{spec.col}__dict"), lits, n)
             if opts.use_bloom:
-                f = f | _bloom_absent(stats.get(f"{spec.col}__bloom"), values, n)
+                f = f | _bloom_absent(stats.get(f"{spec.col}__bloom"), lits, n)
         return t, f
     if isinstance(spec, fs.StartsWith):
         if so is None or so.kind != "string":
@@ -511,7 +544,8 @@ def unit_tri(spec, stats, kinds, n_rows: np.ndarray, opts=None) -> tuple:
     return no, no  # Like / Regexp: residual-only, Unknown
 
 
-_CHUNK_KINDS = ("int", "timestamp", "duration", "decimal", "float", "string", "binary")
+# column kinds whose blocks carry {c}__chunk_min/__chunk_max/__chunk_nulls
+CHUNK_KINDS = ("int", "timestamp", "duration", "decimal", "float", "string", "binary")
 
 
 def _chunk_bounds(vals: list, kind: str, all_null: np.ndarray) -> tuple:
@@ -545,7 +579,7 @@ def chunk_keep(spec, row: dict, kinds, n_rows: int) -> np.ndarray:
     for c in spec.columns():
         so = kinds.get(c)
         arrs = [row.get(f"{c}__chunk_{s}") for s in ("min", "max", "nulls")]
-        if so is None or so.kind not in _CHUNK_KINDS or any(a is None for a in arrs):
+        if so is None or so.kind not in CHUNK_KINDS or any(a is None for a in arrs):
             continue
         nl = np.asarray(arrs[2], dtype=np.int64)
         stats[f"{c}__min"] = _chunk_bounds(arrs[0], so.kind, nl == lens)

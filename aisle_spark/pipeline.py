@@ -1152,12 +1152,11 @@ def scan(
     if where is not None:
         # ship the per-chunk stat arrays of predicate columns into the
         # reader so it can skip chunks (page-index analog) before decode
-        chunk_kinds = (
-            "int", "timestamp", "duration", "float", "string", "binary", "decimal",
-        )
+        from aisle_spark.chunkstats import CHUNK_KINDS
+
         for c in pred_leaves:
             s = next((s for s in specs if s.name == c), None)
-            if s is not None and s.kind in chunk_kinds:
+            if s is not None and s.kind in CHUNK_KINDS:
                 payload_cols += [
                     f"{c}__chunk_min",
                     f"{c}__chunk_max",
@@ -1237,6 +1236,53 @@ def scan_count(
     )
 
 
+_EXACT_ERR = {  # op -> (what it sums, why floats are out)
+    "scan_sum": ("columns", " (float sums are order-dependent — use scan + agg)"),
+    "scan_avg": ("columns", " (float averages are order-dependent — use scan + agg)"),
+    "scan_sum_by": ("sum columns", ""),
+}
+
+
+def _exact_scale(schema: pa.Schema, column: str, op: str) -> int | None:
+    """Decimal scale of the column an exact aggregate ``op`` sums, None
+    for an integer column; anything else (float, date, bool, ...) is a
+    TypeError: only those two domains sum exactly."""
+    from aisle_spark.schema import specs_for_schema
+
+    s = next((s for s in specs_for_schema(schema) if s.name == column), None)
+    if s is None:
+        raise KeyError(f"unknown column {column}")
+    if s.kind == "decimal":
+        return s.arrow_type.scale
+    t = s.arrow_type
+    if s.kind != "int" or pa.types.is_date(t) or pa.types.is_boolean(t):
+        what, why = _EXACT_ERR[op]
+        raise TypeError(
+            f"{op} supports integer and decimal {what}; {column!r} is {s.kind}{why}"
+        )
+    return None
+
+
+def _col_ref(column: str) -> Column:
+    return F.col(column) if "." in column else F.col(f"`{column}`")
+
+
+def _unscaled(column: str, scale: int | None) -> Column:
+    """Decoded values of an exact column as decimal(38,0) integers
+    (decimals unscaled), so sums never round."""
+    c = _col_ref(column)
+    return (c if scale is None else c * F.lit(10**scale)).cast("decimal(38,0)")
+
+
+def _exact_total(total: Column, scale: int | None) -> Column:
+    """An unscaled exact total back in the column's domain: bigint, or
+    decimal(38, s) — the quotient is exact by construction (the unscaled
+    total has >= s trailing digits)."""
+    if scale is None:
+        return total.cast("long").alias("total")
+    return (total / F.lit(10**scale)).cast(f"decimal(38,{scale})").alias("total")
+
+
 def scan_sum(
     blocks: DataFrame,
     schema: pa.Schema,
@@ -1254,30 +1300,10 @@ def scan_sum(
 
     Returns a one-row DataFrame ``(total)`` — bigint for ints, decimal
     (38, s) for decimal(p, s) columns; NULL when no rows match."""
-    import pyarrow as _pa
-
     from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
 
     opts = opts or DEFAULT_OPTIONS
-    spec_ = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if spec_ is None:
-        raise KeyError(f"unknown column {column}")
-    is_decimal = spec_.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            spec_.kind == "int"
-            and not _pa.types.is_date(spec_.arrow_type)
-            and not _pa.types.is_boolean(spec_.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_sum supports integer and decimal columns; {column!r} is "
-            f"{spec_.kind} (float sums are order-dependent — use scan + agg)"
-        )
+    scale = _exact_scale(schema, column, "scan_sum")
     if isinstance(where, str):
         from aisle_spark.sqlcompile import parse_where
 
@@ -1311,41 +1337,26 @@ def scan_sum(
         # medium: the unconditional F.col(__sum) was an AnalysisException)
         sure = None
         boundary_blocks = blocks.filter(keep_mask)
-    scale = spec_.arrow_type.scale if is_decimal else 0
-
-    def finish(total: Column) -> Column:
-        if not is_decimal:
-            return total.cast("long").alias("total")
-        # unscaled -> decimal(38, s); the quotient is exact by
-        # construction (the unscaled total has >= s trailing digits)
-        return (
-            (total / F.lit(10**scale)).cast(f"decimal(38,{scale})")
-        ).alias("total")
 
     if boundary_blocks.isEmpty():
         if sure is None:  # no kept blocks at all: SUM over zero rows
             return blocks.sparkSession.range(1).select(
-                finish(F.lit(None).cast("decimal(38,0)"))
+                _exact_total(F.lit(None).cast("decimal(38,0)"), scale)
             )
-        return sure.select(finish(F.col("t")))
+        return sure.select(_exact_total(F.col("t"), scale))
     proj = sorted(
         {column.split(".")[0]}
         | ({c.split(".")[0] for c in where.columns()} if where else set())
     )
-    bval = F.col(column) if "." in column else F.col(f"`{column}`")
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
     boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.sum(bval).alias("t")
+        F.sum(_unscaled(column, scale)).alias("t")
     )
     if sure is None:
-        return boundary.select(finish(F.col("t")))
+        return boundary.select(_exact_total(F.col("t"), scale))
     return (
         sure.unionAll(boundary)
         .agg(F.sum("t").alias("t"))
-        .select(finish(F.col("t")))
+        .select(_exact_total(F.col("t"), scale))
     )
 
 
@@ -1364,30 +1375,10 @@ def scan_avg(
     end (decimal division, ≥6 fractional digits, then double). Returns a
     one-row DataFrame ``(avg)`` — double, NULL when no non-null values
     match."""
-    import pyarrow as _pa
-
     from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
 
     opts = opts or DEFAULT_OPTIONS
-    spec_ = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if spec_ is None:
-        raise KeyError(f"unknown column {column}")
-    is_decimal = spec_.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            spec_.kind == "int"
-            and not _pa.types.is_date(spec_.arrow_type)
-            and not _pa.types.is_boolean(spec_.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_avg supports integer and decimal columns; {column!r} is "
-            f"{spec_.kind} (float averages are order-dependent — use scan + agg)"
-        )
+    scale = _exact_scale(schema, column, "scan_avg")
     if isinstance(where, str):
         from aisle_spark.sqlcompile import parse_where
 
@@ -1396,7 +1387,6 @@ def scan_avg(
     has_stats = sum_name in blocks.columns and nulls_name in blocks.columns
     where_sure = (~where.not_true(opts)) if where is not None else F.lit(True)
     keep_mask = where.keep(opts) if where is not None else F.lit(True)
-    scale = spec_.arrow_type.scale if is_decimal else 0
     if has_stats:
         sure_mask = (
             where_sure
@@ -1422,7 +1412,7 @@ def scan_avg(
                 F.coalesce(F.col("c"), F.lit(0)) > 0,
                 (
                     F.col("t")
-                    / (F.col("c").cast("decimal(38,0)") * F.lit(10**scale))
+                    / (F.col("c").cast("decimal(38,0)") * F.lit(10 ** (scale or 0)))
                 ).cast("double"),
             ).alias("avg")
         )
@@ -1437,14 +1427,9 @@ def scan_avg(
         {column.split(".")[0]}
         | ({c.split(".")[0] for c in where.columns()} if where else set())
     )
-    bval = F.col(column) if "." in column else F.col(f"`{column}`")
-    cnt_src = bval
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
     boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.sum(bval).alias("t"), F.count(cnt_src).cast("long").alias("c")
+        F.sum(_unscaled(column, scale)).alias("t"),
+        F.count(_col_ref(column)).cast("long").alias("c"),
     )
     merged = boundary if sure is None else sure.unionAll(boundary)
     return finish(
@@ -1565,41 +1550,12 @@ def scan_sum_by(
 
     Returns a DataFrame ``(group_col, total)`` — total is bigint for int
     columns, decimal(38, s) for decimal(p, s)."""
-    import pyarrow as _pa
-
-    from aisle_spark.schema import specs_for_schema
-
     where, opts, where_sure, keep_mask, group_sure, group_key = (
         _group_evidence(schema, group_col, where, opts, "scan_sum_by")
     )
-    sspec = next(
-        (s for s in specs_for_schema(schema) if s.name == sum_col), None
-    )
-    if sspec is None:
-        raise KeyError(f"unknown column {sum_col}")
-    is_decimal = sspec.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            sspec.kind == "int"
-            and not _pa.types.is_date(sspec.arrow_type)
-            and not _pa.types.is_boolean(sspec.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_sum_by supports integer and decimal sum columns; "
-            f"{sum_col!r} is {sspec.kind}"
-        )
+    scale = _exact_scale(schema, sum_col, "scan_sum_by")
     sum_name = f"{sum_col}__sum"
     has_sums = sum_name in blocks.columns
-    scale = sspec.arrow_type.scale if is_decimal else 0
-
-    def finish(total: Column) -> Column:
-        if not is_decimal:
-            return total.cast("long").alias("total")
-        return (
-            (total / F.lit(10**scale)).cast(f"decimal(38,{scale})")
-        ).alias("total")
 
     if has_sums:
         sure_mask = (
@@ -1634,27 +1590,22 @@ def scan_sum_by(
                 F.col(f"`{group_col}__min`").alias(group_col),
                 F.lit(None).cast("decimal(38,0)").alias("t"),
             )
-            return out.select(F.col(f"`{group_col}`"), finish(F.col("t")))
-        return sure.select(F.col(f"`{group_col}`"), finish(F.col("t")))
+            return out.select(F.col(f"`{group_col}`"), _exact_total(F.col("t"), scale))
+        return sure.select(F.col(f"`{group_col}`"), _exact_total(F.col("t"), scale))
     proj = sorted(
         {group_col, sum_col.split(".")[0]}
         | ({c.split(".")[0] for c in where.columns()} if where else set())
     )
-    bval = F.col(sum_col) if "." in sum_col else F.col(f"`{sum_col}`")
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
     boundary = (
         scan(boundary_blocks, schema, where=where, columns=proj)
         .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.sum(bval).alias("t"))
+        .agg(F.sum(_unscaled(sum_col, scale)).alias("t"))
     )
     merged = boundary if sure is None else sure.unionAll(boundary)
     return (
         merged.groupBy(F.col(f"`{group_col}`"))
         .agg(F.sum("t").alias("t"))
-        .select(F.col(f"`{group_col}`"), finish(F.col("t")))
+        .select(F.col(f"`{group_col}`"), _exact_total(F.col("t"), scale))
     )
 
 
@@ -1703,7 +1654,7 @@ def scan_min_max_by(
         {group_col, column.split(".")[0]}
         | ({c.split(".")[0] for c in where.columns()} if where else set())
     )
-    vcol = F.col(column) if "." in column else F.col(f"`{column}`")
+    vcol = _col_ref(column)
     boundary = (
         scan(boundary_blocks, schema, where=where, columns=proj)
         .groupBy(F.col(f"`{group_col}`"))
@@ -1851,15 +1802,14 @@ def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
 
 
 def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
-    import os
+    """(blocks DataFrame, Arrow schema) of an encoded table: EXACTLY the
+    committed file list (orphans from failed or speculative attempts are
+    never visible), at a plain path or any pyarrow.fs URI."""
+    from aisle_spark.datasource import _fs_of, _manifest_of, _read_sidecar_schema
 
-    with open(os.path.join(path, "_aisle_schema.arrow"), "rb") as fh:
-        schema = pa.ipc.read_schema(pa.py_buffer(fh.read()))
-    manifest = os.path.join(path, "_aisle_files.json")
-    if os.path.exists(manifest):
-        # direct-write layout: read EXACTLY the committed file list —
-        # orphans from failed/speculative attempts are never visible
-        # (load_manifest resolves the large-table pointer form)
-        files = load_manifest(None, path)["files"]
-        return spark.read.parquet(*[os.path.join(path, f) for f in files]), schema
-    return spark.read.parquet(path), schema
+    fs, local = _fs_of(path)
+    schema = _read_sidecar_schema(fs, local)
+    root, files = local.rstrip("/"), _manifest_of(fs, local)[0]
+    base = path.rstrip("/")
+    # manifest-relative names joined onto the path exactly as given
+    return spark.read.parquet(*[base + f[len(root):] for f in files]), schema

@@ -149,3 +149,79 @@ def test_rowmask_timestamp_tz_coercion():
     b = pa.RecordBatch.from_arrays([arr], names=["ts"])
     m = row_mask(C("ts").between(datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 31)), b)
     assert m.tolist() == [True, False]
+
+
+def _truncation_table(n: int = 600) -> pa.Table:
+    """One column of every kind the engine encodes, with NULLs, a struct
+    leaf and varied values (so the codecs pick non-trivial bodies)."""
+    import datetime as dt
+    import decimal
+
+    rng = np.random.default_rng(3)
+
+    def maybe(i, v):
+        return None if i % 7 == 0 else v
+
+    return pa.table(
+        {
+            "string": pa.array([maybe(i, f"w{rng.integers(10**6)}") for i in range(n)]),
+            "binary": pa.array([maybe(i, rng.bytes(5)) for i in range(n)]),
+            "int": pa.array([maybe(i, int(rng.integers(-(2**40), 2**40))) for i in range(n)]),
+            "bool": pa.array([maybe(i, bool(i % 3)) for i in range(n)]),
+            "date": pa.array(
+                [maybe(i, dt.date(2024, 1, 1) + dt.timedelta(days=i % 400)) for i in range(n)]
+            ),
+            "float": pa.array([maybe(i, float(rng.standard_normal())) for i in range(n)]),
+            "decimal": pa.array(
+                [maybe(i, decimal.Decimal(int(rng.integers(10**9))).scaleb(-2)) for i in range(n)],
+                pa.decimal128(12, 2),
+            ),
+            "timestamp": pa.array(
+                [maybe(i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=7 * i)) for i in range(n)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "duration": pa.array(
+                [maybe(i, dt.timedelta(microseconds=int(rng.integers(10**12)))) for i in range(n)],
+                pa.duration("us"),
+            ),
+            "intlist": pa.array(
+                [maybe(i, [int(x) for x in rng.integers(0, 50000, i % 9)]) for i in range(n)],
+                pa.list_(pa.int32()),
+            ),
+            "floatlist": pa.array(
+                [maybe(i, [float(x) for x in rng.random(i % 5)]) for i in range(n)],
+                pa.list_(pa.float32()),
+            ),
+            "map": pa.array(
+                [maybe(i, {"k": i, f"e{i % 3}": 2 * i}) for i in range(n)],
+                pa.map_(pa.string(), pa.int64()),
+            ),
+            "struct": pa.array(
+                [maybe(i, {"leaf": maybe(i + 1, f"l{i % 11}")}) for i in range(n)],
+                pa.struct([("leaf", pa.string())]),
+            ),
+        }
+    )
+
+
+@pytest.mark.parametrize(
+    "column",
+    ["string", "binary", "int", "bool", "date", "float", "decimal", "timestamp",
+     "duration", "intlist", "floatlist", "map", "struct.leaf"],
+)
+def test_truncated_payload_raises(column):
+    """A payload cut by 1 byte, by 8 bytes or to half its length must make
+    decode_column raise — never hand back a (garbage) array."""
+    import struct
+
+    t = _truncation_table()
+    spec = next(s for s in specs_for_schema(t.schema) if s.name == column)
+    top, _, leaf = column.partition(".")
+    arr = t.column(top).combine_chunks()
+    if leaf:
+        arr = arr.field(leaf)
+    payload = encode_column(spec, arr)[f"{column}__payload"]
+    assert decode_column(spec, payload).equals(arr)
+    for cut in (payload[:-1], payload[:-8], payload[: len(payload) // 2]):
+        with pytest.raises((ValueError, IndexError, struct.error)):
+            decode_column(spec, cut)

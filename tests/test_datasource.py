@@ -571,32 +571,83 @@ class TestFileLevelPruning:
         touched = set(planned_files(r.partitions()))
         assert len(touched) == 1  # exactly the 'web' file
 
-    def test_file_keep_superset_of_block_survivors(self, spark, per_source_files):
+    def test_file_keep_superset_of_block_survivors(self, spark, per_source_files, tmp_path):
         """Stripping file_stats must never ADD result files — file-level
-        pruning only removes files whose every block was doomed anyway."""
+        pruning only removes files whose every block was doomed anyway.
+        Runs over the token table and over the typed-operand table
+        (decimal, timestamp, date, duration, binary, map, struct leaf),
+        whose OR/NOT/ne trees the file tier now prunes too."""
+        import datetime as dt
         import random
+        from decimal import Decimal
 
-        from aisle_spark.datasource import AisleReader
-        from tests.test_random_predicates import _rand_spec
+        from pyspark.sql import functions as F
 
-        _df, out = per_source_files
-        manifest = os.path.join(out, "_aisle_files.json")
-        m = json.load(open(manifest))
-        rng = random.Random(7)
-        for _ in range(15):
-            spec = _rand_spec(rng)
+        from aisle_spark.datasource import file_keep
+        from aisle_spark.filterspec import Cmp, Not, col, utc_normalize
+        from aisle_spark.pipeline import load_manifest
+        from aisle_spark.schema import specs_for_schema
+        from tests.test_random_predicates import _rand_spec, _rand_typed_spec, _typed_df
+
+        def planned(out, spec):
             r = AisleReader(out)
             r.spec = spec
-            with_stats = dict(_entries(r.partitions()))
-            stripped = dict(m, file_stats={})
-            json.dump(stripped, open(manifest, "w"))
+            return dict(_entries(r.partitions()))
+
+        def check(out, specs):
+            manifest = os.path.join(out, "_aisle_files.json")
+            m = json.load(open(manifest))
+            with_stats = [planned(out, spec) for spec in specs]
+            json.dump(dict(m, file_stats={}), open(manifest, "w"))
             try:
-                r2 = AisleReader(out)
-                r2.spec = spec
-                without = dict(_entries(r2.partitions()))
+                without = [planned(out, spec) for spec in specs]
             finally:
                 json.dump(m, open(manifest, "w"))
-            assert with_stats == without, repr(spec)
+            for spec, w, wo in zip(specs, with_stats, without):
+                assert w == wo, repr(spec)
+
+        _df, out = per_source_files
+        rng = random.Random(7)
+        check(out, [_rand_spec(rng) for _ in range(15)])
+
+        typed = str(tmp_path / "typed")
+        df = _typed_df(spark).withColumn(
+            "ts", F.timestamp_seconds(F.lit(1704067200) + (F.col("price") * 100).cast("long"))
+        )
+        for lo, hi in ((0, 250), (250, 500), (500, 750), (750, 1001)):
+            band = (F.col("price") >= lo) & (F.col("price") < hi)
+            if lo == 0:
+                band = band | F.col("price").isNull()
+            df.filter(band).repartition(1).write.format("aisle").option(
+                "sortCols", "price"
+            ).mode("append").save(typed)
+        rng = random.Random(17)
+        specs = [_rand_typed_spec(rng) for _ in range(24)]
+        base = dt.datetime(2024, 1, 1)
+        specs += [
+            Cmp("ts", rng.choice(["eq", "ne", "lt", "le", "gt", "ge"]),
+                base + dt.timedelta(seconds=rng.randrange(0, 100000)))
+            for _ in range(6)
+        ]
+        # NOT over the NULL-bearing first band: its nulls keep it Unknown
+        specs.append(Not(col("price") < Decimal("250.00")))
+        # shapes the file tier used to keep whole: OR, NOT, map key under OR
+        specs += [
+            (col("price") < Decimal("100.00")) | (col("price") > Decimal("900.00")),
+            Not(col("price") >= Decimal("250.00")),
+            (col("props").map_key("zz") > 1) | (col("price") < Decimal("10.00")),
+        ]
+        check(typed, specs)
+        # the file tier is live on this table: price bands prune whole files,
+        # so the equality above is not vacuous
+        schema = AisleReader(typed).arrow_schema
+        kinds = {s.name: s for s in specs_for_schema(schema)}
+        entries = list(load_manifest(None, typed)["file_stats"].values())
+        assert len(entries) == 4
+        dropped = [
+            int((~file_keep(entries, utc_normalize(spec), kinds)).sum()) for spec in specs
+        ]
+        assert all(dropped[-3:]), dropped
 
     def test_results_exact_with_file_pruning(self, spark, per_source_files):
         from pyspark.sql import functions as F
@@ -926,6 +977,19 @@ class TestMapKeyFileStats:
         assert got == df.filter("try_element_at(props, 'k3') = 'v'").count()
 
 
+def _file_keep(stats: dict | None, spec, schema: pa.Schema) -> bool:
+    """``datasource.file_keep`` on one manifest entry, with the spec
+    prepared as the readers prepare it (``coerce_temporals`` on the where
+    option, then ``utc_normalize``)."""
+    from aisle_spark.datasource import coerce_temporals, file_keep
+    from aisle_spark.filterspec import utc_normalize
+    from aisle_spark.schema import specs_for_schema
+
+    kinds = {s.name: s for s in specs_for_schema(schema)}
+    where = utc_normalize(coerce_temporals(spec, schema))
+    return bool(file_keep([stats], where, kinds)[0])
+
+
 class TestFileKeepDomains:
     """file_keep unit semantics in the typed JSON bound domain."""
 
@@ -937,7 +1001,6 @@ class TestFileKeepDomains:
     def test_timestamp_domain(self):
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         utc = dt.timezone.utc
@@ -947,23 +1010,20 @@ class TestFileKeepDomains:
                 self._b(dt.datetime(2024, 1, 2)),
             ]
         }
-        doms = {"ts": "micros"}
-        assert not file_keep(
-            stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc), doms
+        sch = pa.schema([("ts", pa.timestamp("us"))])
+        assert not _file_keep(
+            stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc), sch
         )
-        assert file_keep(
-            stats, col("ts") > dt.datetime(2024, 1, 1, 12, tzinfo=utc), doms
+        assert _file_keep(
+            stats, col("ts") > dt.datetime(2024, 1, 1, 12, tzinfo=utc), sch
         )
-        assert not file_keep(
-            stats, col("ts") < dt.datetime(2023, 12, 1, tzinfo=utc), doms
+        assert not _file_keep(
+            stats, col("ts") < dt.datetime(2023, 12, 1, tzinfo=utc), sch
         )
-        # without domain knowledge a temporal literal is no evidence
-        assert file_keep(stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc))
 
     def test_date_and_duration_domains(self):
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         stats = {
@@ -973,11 +1033,11 @@ class TestFileKeepDomains:
                 self._b(dt.timedelta(seconds=500)),
             ],
         }
-        doms = {"d": "days", "dur": "us"}
-        assert not file_keep(stats, col("d") > dt.date(2024, 2, 2), doms)
-        assert file_keep(stats, col("d") == dt.date(2024, 1, 15), doms)
-        assert not file_keep(stats, col("dur") > dt.timedelta(seconds=600), doms)
-        assert file_keep(stats, col("dur") >= dt.timedelta(seconds=499), doms)
+        sch = pa.schema([("d", pa.date32()), ("dur", pa.duration("us"))])
+        assert not _file_keep(stats, col("d") > dt.date(2024, 2, 2), sch)
+        assert _file_keep(stats, col("d") == dt.date(2024, 1, 15), sch)
+        assert not _file_keep(stats, col("dur") > dt.timedelta(seconds=600), sch)
+        assert _file_keep(stats, col("dur") >= dt.timedelta(seconds=499), sch)
 
     def test_cross_domain_literals(self):
         """ADVICE r4 high: a DATE literal against a timestamp column (or a
@@ -985,7 +1045,6 @@ class TestFileKeepDomains:
         epoch-µs — coerce into the column's domain or keep the file."""
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         ts_stats = {
@@ -994,88 +1053,92 @@ class TestFileKeepDomains:
                 self._b(dt.datetime(2024, 1, 31)),
             ]
         }
-        doms = {"ts": "micros"}
+        sch = pa.schema([("ts", pa.timestamp("us"))])
         # every row matches ts < DATE '2024-06-01' — the pre-fix code
         # compared epoch-days to epoch-µs and silently pruned the file
-        assert file_keep(ts_stats, col("ts") < dt.date(2024, 6, 1), doms)
+        assert _file_keep(ts_stats, col("ts") < dt.date(2024, 6, 1), sch)
         # the coercion is real, not a blanket keep: midnight 2024-06-01
         # epoch-µs correctly excludes this January file for ">"
-        assert not file_keep(ts_stats, col("ts") > dt.date(2024, 6, 1), doms)
+        assert not _file_keep(ts_stats, col("ts") > dt.date(2024, 6, 1), sch)
 
         d_stats = {"d": [self._b(dt.date(2024, 1, 1)), self._b(dt.date(2024, 1, 31))]}
         # datetime literal vs date column: epoch-days can't hold sub-day
         # precision — no evidence, file kept (pre-fix: epoch-µs is a huge
         # int so "d > datetime" wrongly pruned every file)
-        assert file_keep(
-            d_stats, col("d") > dt.datetime(2024, 1, 1), {"d": "days"}
+        assert _file_keep(
+            d_stats, col("d") > dt.datetime(2024, 1, 1), pa.schema([("d", pa.date32())])
         )
         # duration literal vs non-duration column: no evidence
-        assert file_keep(
-            ts_stats, col("ts") > dt.timedelta(seconds=1), doms
+        assert _file_keep(
+            ts_stats, col("ts") > dt.timedelta(seconds=1), sch
         )
 
     def test_decimal_domain_exact_strings(self):
         import decimal
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         # lexicographic comparison of these strings would invert: "9.50" > "10.20"
         stats = {"price": ["9.50", "10.20"]}
-        assert file_keep(stats, col("price") >= decimal.Decimal("10"))
-        assert not file_keep(stats, col("price") > decimal.Decimal("10.20"))
-        assert not file_keep(stats, col("price") < decimal.Decimal("9.50"))
+        sch = pa.schema([("price", pa.decimal128(12, 2))])
+        assert _file_keep(stats, col("price") >= decimal.Decimal("10"), sch)
+        assert not _file_keep(stats, col("price") > decimal.Decimal("10.20"), sch)
+        assert not _file_keep(stats, col("price") < decimal.Decimal("9.50"), sch)
         # unparseable bound => Unknown => keep (never crash)
-        assert file_keep({"price": ["abc", "def"]}, col("price") > decimal.Decimal(1))
+        assert _file_keep(
+            {"price": ["abc", "def"]}, col("price") > decimal.Decimal(1), sch
+        )
         # INT literal vs decimal domain coerces exactly and prunes (the
         # where-grammar path: "l_price >= 60000" parses as Python int)
-        doms = {"price": "decimal"}
-        assert not file_keep(stats, col("price") > 11, doms)
-        assert file_keep(stats, col("price") > 10, doms)
-        # float literal vs SCALELESS decimal domain: no evidence
-        # (double-cast boundary rounding could flip strict comparisons)
-        assert file_keep(stats, col("price") > 11.0, doms)
+        assert not _file_keep(stats, col("price") > 11, sch)
+        assert _file_keep(stats, col("price") > 10, sch)
+        # a Decimal finer than the column's grid, or against an int
+        # column, still compares exactly (Spark widens both sides)
+        assert not _file_keep(stats, col("price") > decimal.Decimal("10.201"), sch)
+        assert _file_keep(stats, col("price") > decimal.Decimal("10.199"), sch)
+        ints = pa.schema([("n", pa.int64())])
+        assert not _file_keep({"n": [1, 9]}, col("n") > decimal.Decimal("9.5"), ints)
+        assert _file_keep({"n": [1, 9]}, col("n") > decimal.Decimal("8.5"), ints)
 
     def test_decimal_domain_exact_float_literals(self):
         import decimal
         import math
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         stats = {"price": ["9.50", "10.25"]}
-        doms = {"price": "decimal:2"}
+        sch = pa.schema([("price", pa.decimal128(12, 2))])
         # on-grid float literal (integer-valued, or binary-exact like
         # .5/.25), ulp far below the 0.01 grid step: full evidence — the
         # common "WHERE price >= 60000.00" money shape
-        assert not file_keep(stats, col("price") > 11.0, doms)
-        assert not file_keep(stats, col("price") > 10.25, doms)
-        assert file_keep(stats, col("price") >= 10.25, doms)
-        assert not file_keep(stats, col("price") < 9.50, doms)
-        assert file_keep(stats, col("price") <= 9.50, doms)
-        assert not file_keep(stats, col("price") == 60000.00, doms)
+        assert not _file_keep(stats, col("price") > 11.0, sch)
+        assert not _file_keep(stats, col("price") > 10.25, sch)
+        assert _file_keep(stats, col("price") >= 10.25, sch)
+        assert not _file_keep(stats, col("price") < 9.50, sch)
+        assert _file_keep(stats, col("price") <= 9.50, sch)
+        assert not _file_keep(stats, col("price") == 60000.00, sch)
         # off-grid literal (neither 0.1 nor 10.2 is exactly representable
         # in binary, so Decimal(v) is off the 10^-2 grid): no evidence —
         # Spark's double-domain comparison of the near-boundary grid
         # value could disagree with the exact-Decimal one
-        assert file_keep(stats, col("price") < 0.10, doms)
-        assert file_keep(stats, col("price") > 10.20, doms)
+        assert _file_keep(stats, col("price") < 0.10, sch)
+        assert _file_keep(stats, col("price") > 10.20, sch)
         # magnitude where the ulp exceeds the grid step: no evidence
         big = float(2**60)
         assert math.ulp(big) > 0.01  # the condition the guard must catch
-        assert file_keep(stats, col("price") > big, doms)
+        assert _file_keep(stats, col("price") > big, sch)
         # non-finite: no evidence
-        assert file_keep(stats, col("price") > math.inf, doms)
+        assert _file_keep(stats, col("price") > math.inf, sch)
         # int and Decimal literals keep working against the scaled domain
-        assert not file_keep(stats, col("price") > 11, doms)
-        assert not file_keep(
-            stats, col("price") > decimal.Decimal("10.25"), doms
+        assert not _file_keep(stats, col("price") > 11, sch)
+        assert not _file_keep(
+            stats, col("price") > decimal.Decimal("10.25"), sch
         )
 
     def test_nan_bound_poisons_merge(self):
         import math
 
-        from aisle_spark.datasource import file_keep, fold_file_stats
+        from aisle_spark.datasource import fold_file_stats
         from aisle_spark.filterspec import col
 
         acc = fold_file_stats(
@@ -1090,16 +1153,22 @@ class TestFileKeepDomains:
         )
         assert acc["x"][:2] == [1.0, None]  # NaN block => max side Unknown
         # a NaN-bearing file must stay for x > v under Spark's NaN-greatest order
-        assert file_keep({"x": [1.0, None]}, col("x") > 100.0)
+        assert _file_keep(
+            {"x": [1.0, None]}, col("x") > 100.0, pa.schema([("x", pa.float64())])
+        )
 
     def test_string_bounds_stay_lexicographic(self):
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         # string columns keep plain string comparison: "10" < "9"
         stats = {"s": ["10", "9"]}
-        assert not file_keep(stats, col("s") > "95")
-        assert file_keep(stats, col("s") == "42")
+        sch = pa.schema([("s", pa.string())])
+        assert not _file_keep(stats, col("s") > "95", sch)
+        assert _file_keep(stats, col("s") == "42", sch)
+        # the file tier evaluates every shape, not just a top-level AND:
+        # an OR of two equalities outside the file's bounds drops it
+        assert not _file_keep(stats, (col("s") == "0") | (col("s") == "95"), sch)
+        assert _file_keep(stats, (col("s") == "0") | (col("s") == "42"), sch)
 
 
 class _CountingFS:
@@ -1247,7 +1316,7 @@ class TestBinaryFileStats:
     _FILE_STAT_KINDS)."""
 
     def test_file_keep_bytes_domain(self):
-        from aisle_spark.datasource import _json_stat_bound, file_keep
+        from aisle_spark.datasource import _json_stat_bound
         from aisle_spark.filterspec import col
 
         stats = {"h": [_json_stat_bound(b"\x10aa"), _json_stat_bound(b"\x20zz")]}
@@ -1255,13 +1324,16 @@ class TestBinaryFileStats:
         import json
 
         json.dumps(stats)  # JSON-safe
-        assert not file_keep(stats, col("h") > b"\x30")
-        assert file_keep(stats, col("h") >= b"\x15")
-        assert not file_keep(stats, col("h") < b"\x10aa")
+        sch = pa.schema([("h", pa.binary())])
+        assert not _file_keep(stats, col("h") > b"\x30", sch)
+        assert _file_keep(stats, col("h") >= b"\x15", sch)
+        assert not _file_keep(stats, col("h") < b"\x10aa", sch)
+        # Spark pushes binary filter values down as bytearray
+        assert not _file_keep(stats, col("h") > bytearray(b"\x30"), sch)
         # corrupted / foreign dict bound => Unknown => keep
-        assert file_keep({"h": [{"x": 1}, {"x": 2}]}, col("h") > b"\x30")
+        assert _file_keep({"h": [{"x": 1}, {"x": 2}]}, col("h") > b"\x30", sch)
         # non-bytes predicate against a b64 bound => Unknown => keep
-        assert file_keep(stats, col("h") > "zzz")
+        assert _file_keep(stats, col("h") > "zzz", sch)
 
     def test_planning_drops_files_on_binary_bounds(self, spark, tmp_path):
         from pyspark.sql import functions as F
@@ -1297,21 +1369,21 @@ class TestNullCountFileStats:
     files — the `WHERE deleted_at IS NULL` shape at file granularity."""
 
     def test_file_keep_null_semantics(self):
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         no_nulls = {"v": [1, 9, 0, 100]}
         some_nulls = {"v": [1, 9, 40, 100]}
         all_nulls = {"v": [None, None, 100, 100]}
         legacy = {"v": [1, 9]}  # pre-r4 entry: no null evidence
-        assert not file_keep(no_nulls, col("v").is_null())
-        assert file_keep(some_nulls, col("v").is_null())
-        assert file_keep(all_nulls, col("v").is_null())
-        assert file_keep(no_nulls, col("v").is_not_null())
-        assert file_keep(some_nulls, col("v").is_not_null())
-        assert not file_keep(all_nulls, col("v").is_not_null())
-        assert file_keep(legacy, col("v").is_null())
-        assert file_keep(legacy, col("v").is_not_null())
+        sch = pa.schema([("v", pa.int64())])
+        assert not _file_keep(no_nulls, col("v").is_null(), sch)
+        assert _file_keep(some_nulls, col("v").is_null(), sch)
+        assert _file_keep(all_nulls, col("v").is_null(), sch)
+        assert _file_keep(no_nulls, col("v").is_not_null(), sch)
+        assert _file_keep(some_nulls, col("v").is_not_null(), sch)
+        assert not _file_keep(all_nulls, col("v").is_not_null(), sch)
+        assert _file_keep(legacy, col("v").is_null(), sch)
+        assert _file_keep(legacy, col("v").is_not_null(), sch)
 
     @pytest.fixture()
     def null_files(self, spark, tmp_path):

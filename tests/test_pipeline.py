@@ -191,6 +191,25 @@ class TestEndToEnd:
         out = scan(blocks2, schema2, where=col("source") == "books")
         assert out.count() == df.filter("source = 'books'").count()
 
+    def test_read_encoded_through_file_uri(self, spark, tmp_path):
+        """A ``file://`` URI reads the same committed blocks as the plain
+        path (the sidecar schema and manifest go through pyarrow.fs)."""
+        df = spark.createDataFrame(pa.Table.from_batches([synth_batch(2, 1000)]))
+        path = str(tmp_path / "enc")
+        write_encoded(encode_table(df, parts=2), path, TOKEN_SCHEMA)
+        plain, schema = read_encoded(spark, path)
+        uri, uri_schema = read_encoded(spark, f"file://{path}")
+        assert uri_schema.equals(schema)
+        assert uri.inputFiles() and all(f.startswith("file:") for f in uri.inputFiles())
+
+        def rows(blocks):
+            return sorted(
+                (r.doc_id, list(r.tokens))
+                for r in scan(blocks, schema, columns=["doc_id", "tokens"]).collect()
+            )
+
+        assert rows(uri) == rows(plain)
+
 
 class TestInlineEncode:
     """The narrow encode (encode_files_direct): python tasks encode their

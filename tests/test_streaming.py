@@ -169,7 +169,9 @@ def test_stream_commits_record_file_stats(spark, dirs):
     some = next(iter(m["file_stats"].values()))
     assert "n_tok" in some and some["n_tok"][0] <= some["n_tok"][1]
 
-    from aisle_spark.datasource import file_keep
+    from aisle_spark.datasource import _read_sidecar_schema, file_keep
+    from aisle_spark.schema import specs_for_schema
 
+    kinds = {s.name: s for s in specs_for_schema(_read_sidecar_schema(None, out))}
     spec = col("n_tok") > 10**9
-    assert all(not file_keep(s, spec) for s in m["file_stats"].values())
+    assert not file_keep(list(m["file_stats"].values()), spec, kinds).any()
